@@ -611,8 +611,10 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
     require(lst.fieldNames.contains(c), s"no such column $c")
     val v = graft.functions.Coerce.coerce(raw, lst(c).dataType)
     // serving path: materialized rows, zero jobs steady-state (driver-side
-    // stats + cached-bloom pruning + footer-cached decode); the JSON face
-    // is a LocalRelation — no distributed work either way
+    // stats + cached-bloom pruning + footer-cached decode). The JSON face
+    // is NOT free: wrapping the rows in a LocalRelation and rendering it
+    // through dfJson (limit + toJSON.collect) plans and runs one Spark job
+    // per call.
     val rows = table.readPointRows(c, v)
     import scala.jdk.CollectionConverters._
     val st = org.apache.spark.sql.types.StructType(
@@ -1144,7 +1146,10 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
     val mode = qs(ex).getOrElse("mode", "replace")
     val tmp = java.nio.file.Files.createTempFile("graft-upload-", ".csv")
     try {
-      java.nio.file.Files.write(tmp, body(ex).getBytes(StandardCharsets.UTF_8))
+      // Stream the body straight to disk: no in-heap copy of the CSV, and
+      // its bytes reach Spark's reader unchanged (no UTF-8 round trip).
+      java.nio.file.Files.copy(ex.getRequestBody, tmp,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       if (mode == "cdc") uploadCdc(ex, t, tmp)
       else {
         val table = session.catalog.ingestCsv(tmp.toString, t, mode = mode)

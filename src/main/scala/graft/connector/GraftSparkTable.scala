@@ -536,8 +536,6 @@ final class GraftScanBuilder(
     // Filters carry LOGICAL names; translation and bucket pruning act on
     // the physical twin. `pushed` keeps the logical originals (what Spark
     // renders in plans); build() re-physicalizes.
-    if (sys.props.contains("graft.debug.pushFilters"))
-      println(s"GRAFT pushFilters arrived: ${filters.map(f => f.getClass.getSimpleName + ":" + f).mkString(" | ")}")
     pushed = filters.filter { f =>
       val pf = GraftSparkTable.filterToPhysical(f, tableSchema)
       ParquetPredicate.translate(pf, tableSchema).isDefined ||

@@ -98,35 +98,19 @@ object Merge {
   def latestAll(updates: DataFrame, key: String, precombine: String): DataFrame = {
     // Measured-keep (r19): a max + null-safe-join-back rewrite (aggregate
     // narrow (key, precombine) pairs, stream full rows through the probe
-    // side) was implemented, property-proven set-equivalent
-    // ([[latestAllJoinBack]], MergeProps), and measured SLOWER on the
-    // CDC-chain workload at every chain length (CompactProbe sweep,
-    // chains 4/12/32: window 1.1/1.35/2.2-2.9 s vs join 1.5/2.9/4.1-4.2 s
-    // end-to-end compact) — full-update chains put EVERY key in every
-    // delta, so the per-key maxima table is key-set-sized, falls out of
-    // broadcast range, and the join re-scans and re-shuffles the chain
-    // twice where the window pays one exchange + sort. The window stays.
-    if (sys.props.get("graft.merge.latestAllJoinBack").contains("true"))
-      return latestAllJoinBack(updates, key, precombine)
+    // side) was property-proven set-equivalent and measured SLOWER on the
+    // CDC-chain workload at every chain length (chains 4/12/32: window
+    // 1.1/1.35/2.2-2.9 s vs join 1.5/2.9/4.1-4.2 s end-to-end compact) —
+    // full-update chains put EVERY key in every delta, so the per-key
+    // maxima table is key-set-sized, falls out of broadcast range, and the
+    // join re-scans and re-shuffles the chain twice where the window pays
+    // one exchange + sort. The window stays; OPTIMIZATION_r19.md has the
+    // A/B.
     val w = Window.partitionBy(col(key)).orderBy(col(precombine).desc)
     updates
       .withColumn("__rk", rank().over(w))
       .filter(col("__rk") === 1)
       .drop("__rk")
-  }
-
-  /** The measured-rejected join-back form of [[latestAll]] (see the note
-    * there) — kept behind the sys-prop toggle so the CompactProbe A/B is
-    * reproducible from current code; MergeProps proves set equivalence
-    * (ties at the max kept, all-null groups keep every row, mixed groups
-    * drop null-precombine rows — exactly rank() = 1 under DESC NULLS
-    * LAST). */
-  private[graft] def latestAllJoinBack(
-      updates: DataFrame, key: String, precombine: String): DataFrame = {
-    val mx = updates.groupBy(col(key).as("__lk")).agg(max(col(precombine)).as("__mx"))
-    updates.join(mx,
-        col(key) <=> col("__lk") && col(precombine) <=> col("__mx"))
-      .drop("__lk", "__mx")
   }
 
   /**
@@ -162,13 +146,6 @@ object Merge {
     * The kept side is replaced by `limit(0)` over the SAME aligned plan,
     * so the output schema (names, types, nullability through the union)
     * is byte-identical to the general path's. */
-  /** `keysOverride` hands the anti join its key side PRE-BUILT (a
-    * LocalRelation of the batch's distinct keys the caller already
-    * collected — [[graft.table.GraftTable]]'s bucketed pre-pass): the
-    * merge then never re-scans the updates to derive its key set, and the
-    * broadcast builds from driver-local rows instead of a second pass over
-    * the batch. The caller guarantees the override IS the distinct key set
-    * of `updates` and fits the broadcast bound. */
   def merge(
       target: DataFrame,
       updates: DataFrame,
@@ -178,8 +155,7 @@ object Merge {
       broadcastUpdates: Boolean = false,
       updatesRowsHint: Option[Long] = None,
       preDeduped: Boolean = false,
-      targetEmpty: Boolean = false,
-      keysOverride: Option[DataFrame] = None): DataFrame = {
+      targetEmpty: Boolean = false): DataFrame = {
 
     val deduped =
       if (preDeduped) updates
@@ -232,19 +208,15 @@ object Merge {
         // The anti join needs only the DISTINCT KEY SET, which precombine
         // dedup cannot change — build it from the raw updates with a narrow
         // single-column distinct instead of referencing the (windowed)
-        // deduped plan a second time; or take the caller's pre-collected
-        // set verbatim (keysOverride).
-        val keys = keysOverride.getOrElse(
-          updates.select(col(key)).dropDuplicates(Seq(key)))
+        // deduped plan a second time.
+        val keys = updates.select(col(key)).dropDuplicates(Seq(key))
         // Size-gated broadcast: an unconditional hint would OOM on a
         // backfill batch that replays the whole history. The caller passes a
         // row count it already knows (bucketed merges count while bucketing)
         // so the common path costs no extra job; otherwise one cheap pass
         // over the updates — and no count at all when broadcasting is off.
-        // An override is bounded by construction, so it always broadcasts.
         val keysSide =
-          if (keysOverride.isDefined && broadcastUpdates) broadcast(keys)
-          else if (broadcastUpdates &&
+          if (broadcastUpdates &&
               updatesRowsHint.getOrElse(keys.count()) <= maxBroadcastKeys)
             broadcast(keys)
           else keys
@@ -260,12 +232,10 @@ object Merge {
     * lets callers that already know the size skip the extra job. */
   def deleteKeys(target: DataFrame, keys: DataFrame, key: String,
       broadcastKeys: Boolean = true,
-      keysRowsHint: Option[Long] = None,
-      keysOverride: Option[DataFrame] = None): DataFrame = {
-    val k = keysOverride.getOrElse(keys.select(col(key)).dropDuplicates(Seq(key)))
+      keysRowsHint: Option[Long] = None): DataFrame = {
+    val k = keys.select(col(key)).dropDuplicates(Seq(key))
     val side =
-      if (keysOverride.isDefined && broadcastKeys) broadcast(k)
-      else if (broadcastKeys && keysRowsHint.getOrElse(k.count()) <= maxBroadcastKeys)
+      if (broadcastKeys && keysRowsHint.getOrElse(k.count()) <= maxBroadcastKeys)
         broadcast(k)
       else k
     target.join(side, Seq(key), "left_anti")

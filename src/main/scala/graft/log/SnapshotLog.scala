@@ -180,9 +180,6 @@ object SnapshotLog {
     maintenanceLocks.computeIfAbsent(
       tableRoot.toAbsolutePath.normalize.toString, _ => new Object)
 
-  private implicit val detailFormats: Formats = DefaultFormats
-  private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()
-
   /** Process-wide parsed-detail cache, keyed by `path@mtime` (see
     * `detailKey`): detail files are claim-once immutable, so parses are
     * shareable across every SnapshotLog instance — the v2 catalog creates
@@ -293,56 +290,27 @@ object SnapshotLog {
         }
       })
 
-  /** Highest detail-format revision this build can read, and the revision
-    * it writes. History: revision 1 = JSON details (pre-r17); revision 2 =
-    * binary `GDT1` details (r17, forward-only); revision 3 = `GDT2`
-    * details (r18): identical body, plus a mandatory trailing CRC32 so
-    * corruption is detected deterministically instead of relying on
-    * structural guards to trip. Readers parse all three. Every new
-    * manifest core stamps `minReader = ReaderRevision`;
-    * [[SnapshotLog#parseManifest]] refuses any core demanding more than
-    * this constant, so a future revision 4 fails THIS build with
-    * "log requires reader revision ≥ 4" instead of a byte-level parse
-    * error — the marker the r17 one-way door lacked. */
+  /** The detail-format revision this build reads and writes. History:
+    * revision 1 = JSON details (pre-r17); revision 2 = binary `GDT1`
+    * details (r17); revision 3 = `GDT2` details (r18): the `GDT1` body
+    * plus a mandatory trailing CRC32, so corruption is detected
+    * deterministically instead of relying on structural guards to trip.
+    * Only revision 3 is read or written; an older document is refused by
+    * name (see [[parseDetailBytes]]). Every manifest core stamps
+    * `minReader = ReaderRevision`; [[SnapshotLog#parseManifest]] refuses
+    * any core demanding more than this constant, so a future revision 4
+    * fails THIS build with "log requires reader revision ≥ 4" instead of a
+    * byte-level parse error. */
   private[graft] val ReaderRevision = 3
 
-  /** Writer-side compatibility knob (the other half of the Iceberg
-    * format-version contract): the detail revision THIS process writes.
-    * Default: the newest. A fleet mid-rolling-upgrade sets
-    * `-Dgraft.log.detailRevision=2` (or `1` for JSON-era readers) so new
-    * commits stay readable by not-yet-upgraded processes, then removes
-    * the knob once every reader is current — without it the first commit
-    * from an upgraded writer is an instant flag-day for old readers.
-    * SCOPE: revision 1 means the SEGMENTATION-AWARE JSON era (readers
-    * that compose `detailSegments`) — the knob changes the per-document
-    * ENCODING, not the chain shape; a pre-segmentation reader also
-    * predates the `minReader` gate itself, so no stamp can protect it.
-    * Stamped into `minReader` per commit; a SEGMENTED commit additionally
-    * floors at its parent chain's own `minReader` (the chain may carry
-    * newer-revision segments a downgraded stamp would lie about — a fold,
-    * e.g. any compact, rewrites everything and genuinely drops the floor). */
-  private[graft] def writerRevision: Int =
-    sys.props.get("graft.log.detailRevision") match {
-      case None => ReaderRevision
-      case Some(v) =>
-        val r = v.trim.toIntOption.getOrElse(-1)
-        require(r >= 1 && r <= ReaderRevision,
-          s"graft.log.detailRevision='$v' is not a revision in the " +
-            s"supported range 1..$ReaderRevision")
-        r
-    }
-
-  /** Binary detail documents start with one of these magics (`GDT1` =
-    * r17 revision 2, no checksum; `GDT2` = r18 revision 3, trailing
-    * CRC32); anything else (a '{') is a legacy JSON detail and takes the
-    * streaming-JSON / json4s path below — old logs stay readable without
-    * migration. */
-  private val DetailMagic = Array[Byte]('G', 'D', 'T', '1')
+  /** Binary detail documents start with this magic (`GDT2`, revision 3,
+    * trailing CRC32). The older encodings — `GDT1` (revision 2) and JSON
+    * (revision 1, a leading '{') — are recognized only to be refused. */
+  private val DetailMagic1 = Array[Byte]('G', 'D', 'T', '1')
   private val DetailMagic2 = Array[Byte]('G', 'D', 'T', '2')
 
-  /** Parse a SnapshotDetail document, any era. Binary (magic `GDT1`
-    * r17 / `GDT2` r18, which adds a mandatory trailing CRC32) is
-    * the format [[writeDetailBytes]] emits: each dir is stated
+  /** Parse a `GDT2` SnapshotDetail document — the format
+    * [[writeDetailBytes]] emits: each dir is stated
     * ONCE with its record count and stats inline (the JSON form repeated
     * every dir name three times — dataDirs array, dirRecords key, dirStats
     * key — which tripled both bytes and string allocations), stat KEYS are
@@ -350,47 +318,44 @@ object SnapshotLog {
     * "col:min"/"col:max" keys a million times each), and the result's
     * dirRecords/dirStats are [[ArrayDirMap]]s — parallel arrays, ZERO hash
     * building at parse time; `get` forces a one-time index, iteration
-    * never does. Measured (DetailCodecBench, 10⁶ dirs): 147 MB JSON →
+    * never does. Measured (r17, 10⁶ dirs): 147 MB JSON →
     * 56 MB binary; parse 3.5-5 s → sub-second, and the remaining cost is
     * the inner per-dir stats Maps, not tokenization or top-level maps. */
   private def magicIs(bytes: Array[Byte], m: Array[Byte]): Boolean =
     bytes.length >= 4 && bytes(0) == m(0) && bytes(1) == m(1) &&
       bytes(2) == m(2) && bytes(3) == m(3)
 
-  private[graft] def parseDetailBytes(bytes: Array[Byte]): SnapshotDetail =
-    if (magicIs(bytes, DetailMagic2))
-      parseBinaryDetail(bytes, checksummed = true)
-    else if (magicIs(bytes, DetailMagic))
-      parseBinaryDetail(bytes, checksummed = false)
-    else
-      try streamDetail(bytes)
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          Serialization.read[SnapshotDetail](
-            new String(bytes, StandardCharsets.UTF_8))
-      }
-
-  private def parseBinaryDetail(
-      bytes: Array[Byte], checksummed: Boolean): SnapshotDetail = {
-    // GDT2: verify the trailing CRC32 over everything before it FIRST —
-    // any flipped bit or truncation fails here with one deterministic
-    // message, before body decoding can act on damaged lengths. GDT1
-    // (r17, no trailer) keeps the structural guards only.
-    val bodyEnd = if (checksummed) bytes.length - 4 else bytes.length
-    if (checksummed) {
-      require(bytes.length >= 8,
-        s"detail document corrupt: ${bytes.length} bytes is shorter than " +
-          "the GDT2 magic + checksum")
-      val crc = new java.util.zip.CRC32()
-      crc.update(bytes, 0, bodyEnd)
-      val stored = ((bytes(bodyEnd) & 0xffL) << 24) |
-        ((bytes(bodyEnd + 1) & 0xffL) << 16) |
-        ((bytes(bodyEnd + 2) & 0xffL) << 8) |
-        (bytes(bodyEnd + 3) & 0xffL)
-      require(crc.getValue == stored,
-        f"detail document corrupt: CRC32 mismatch (stored $stored%08x, " +
-          f"computed ${crc.getValue}%08x over $bodyEnd bytes)")
+  private[graft] def parseDetailBytes(bytes: Array[Byte]): SnapshotDetail = {
+    if (!magicIs(bytes, DetailMagic2)) {
+      val era =
+        if (magicIs(bytes, DetailMagic1)) "a GDT1 (revision 2) document"
+        else if (bytes.nonEmpty && bytes(0) == '{') "a JSON (revision 1) document"
+        else "not a GDT2 document"
+      throw new IllegalStateException(
+        s"detail document is $era; this build reads only detail revision " +
+          s"$ReaderRevision (GDT2). Logs written before revision " +
+          s"$ReaderRevision are not readable; rebuild the table.")
     }
+    parseBinaryDetail(bytes)
+  }
+
+  private def parseBinaryDetail(bytes: Array[Byte]): SnapshotDetail = {
+    // Verify the trailing CRC32 over everything before it FIRST — any
+    // flipped bit or truncation fails here with one deterministic message,
+    // before body decoding can act on damaged lengths.
+    require(bytes.length >= 8,
+      s"detail document corrupt: ${bytes.length} bytes is shorter than " +
+        "the GDT2 magic + checksum")
+    val bodyEnd = bytes.length - 4
+    val crc = new java.util.zip.CRC32()
+    crc.update(bytes, 0, bodyEnd)
+    val stored = ((bytes(bodyEnd) & 0xffL) << 24) |
+      ((bytes(bodyEnd + 1) & 0xffL) << 16) |
+      ((bytes(bodyEnd + 2) & 0xffL) << 8) |
+      (bytes(bodyEnd + 3) & 0xffL)
+    require(crc.getValue == stored,
+      f"detail document corrupt: CRC32 mismatch (stored $stored%08x, " +
+        f"computed ${crc.getValue}%08x over $bodyEnd bytes)")
     var pos = 4
     def vint(): Long = {
       var shift = 0; var r = 0L
@@ -474,9 +439,9 @@ object SnapshotLog {
     }
     val deltaDirs = strings()
     val removedDirs = strings()
-    // The body must account for every byte before the trailer (GDT2) or
-    // the end of file (GDT1) — leftover bytes mean a damaged document
-    // whose structural fields happened to stay self-consistent.
+    // The body must account for every byte before the trailer — leftover
+    // bytes mean a damaged document whose structural fields happened to
+    // stay self-consistent.
     require(pos == bodyEnd,
       s"detail document corrupt: ${bodyEnd - pos} undecoded bytes after " +
         "the last section")
@@ -493,56 +458,6 @@ object SnapshotLog {
         else new ArrayDirMap[Map[String, String]](sk, stV.result()))
   }
 
-  private def streamDetail(bytes: Array[Byte]): SnapshotDetail = {
-    import com.fasterxml.jackson.core.JsonToken._
-    val p = jsonFactory.createParser(bytes)
-    try {
-      require(p.nextToken() == START_OBJECT, "detail: not an object")
-      var dataDirs: Seq[String] = Seq.empty
-      var deltaDirs: Seq[String] = Seq.empty
-      var removedDirs: Seq[String] = Seq.empty
-      var dirRecords: Map[String, Long] = Map.empty
-      var dirStats: Map[String, Map[String, String]] = Map.empty
-      def strings(): Seq[String] = {
-        require(p.currentToken() == START_ARRAY, s"detail: ${p.currentToken()}")
-        val b = Vector.newBuilder[String]
-        while (p.nextToken() != END_ARRAY) b += p.getText
-        b.result()
-      }
-      while (p.nextToken() != END_OBJECT) {
-        val field = p.currentName()
-        p.nextToken()
-        field match {
-          case "dataDirs" => dataDirs = strings()
-          case "deltaDirs" => deltaDirs = strings()
-          case "removedDirs" => removedDirs = strings()
-          case "dirRecords" =>
-            require(p.currentToken() == START_OBJECT, "detail: dirRecords")
-            val b = Map.newBuilder[String, Long]
-            while (p.nextToken() != END_OBJECT) {
-              val k = p.currentName(); p.nextToken(); b += k -> p.getLongValue
-            }
-            dirRecords = b.result()
-          case "dirStats" =>
-            require(p.currentToken() == START_OBJECT, "detail: dirStats")
-            val b = Map.newBuilder[String, Map[String, String]]
-            while (p.nextToken() != END_OBJECT) {
-              val k = p.currentName()
-              require(p.nextToken() == START_OBJECT, "detail: stats entry")
-              val inner = Map.newBuilder[String, String]
-              while (p.nextToken() != END_OBJECT) {
-                val ik = p.currentName(); p.nextToken(); inner += ik -> p.getText
-              }
-              b += k -> inner.result()
-            }
-            dirStats = b.result()
-          case _ => p.skipChildren() // forward-compat, as the AST reader
-        }
-      }
-      SnapshotDetail(dataDirs, deltaDirs, removedDirs, dirRecords, dirStats)
-    } finally p.close()
-  }
-
   /** Binary detail WRITE — see [[parseDetailBytes]] for the layout
     * rationale. Layout (all counts/lengths unsigned LEB128 varints,
     * record values zigzag varints, strings length-prefixed UTF-8):
@@ -555,7 +470,7 @@ object SnapshotLog {
     *   nExtraRecords, (key, record)*          — records for non-data dirs
     *   nExtraStats, (key, nStats, (keyIdx, value)*)*
     *   nDeltaDirs, dir* ; nRemovedDirs, dir*
-    *   CRC32 (4 bytes big-endian) of everything above   — GDT2 only
+    *   CRC32 (4 bytes big-endian) of everything above
     *
     * The extras sections carry dirRecords/dirStats keys outside dataDirs
     * (delta dirs get record counts); a dir is otherwise stated exactly
@@ -563,13 +478,7 @@ object SnapshotLog {
     * 147 MB → 56 MB, write 0.85 s → ~0.3 s; the fold commit every
     * `maxDetailSegments` writes the full document, so the fold's amortized
     * metadata cost drops with it. */
-  private[graft] def writeDetailBytes(
-      d: SnapshotDetail, revision: Int = ReaderRevision): Array[Byte] = {
-    // Revision 1: the legacy JSON document every era parses — the
-    // rolling-upgrade escape hatch for pre-r17 readers. Same shape
-    // streamDetail/json4s read (field names are the case class's).
-    if (revision <= 1)
-      return Serialization.write(d).getBytes(StandardCharsets.UTF_8)
+  private[graft] def writeDetailBytes(d: SnapshotDetail): Array[Byte] = {
     // Unsynchronized growable buffer: ByteArrayOutputStream synchronizes
     // every write, and varint encoding writes byte-at-a-time — at 10⁶ dirs
     // that is tens of millions of monitor acquisitions on the fold path.
@@ -600,8 +509,7 @@ object SnapshotLog {
       len += b.length
     }
     ensure(4)
-    System.arraycopy(
-      if (revision == 2) DetailMagic else DetailMagic2, 0, buf, 0, 4)
+    System.arraycopy(DetailMagic2, 0, buf, 0, 4)
     len = 4
     val dict = new java.util.LinkedHashMap[String, Integer]()
     d.dirStats.foreachEntry((_, m) => m.keysIterator.foreach { k =>
@@ -632,19 +540,16 @@ object SnapshotLog {
     def strs(vs: Seq[String]): Unit = { vint(vs.size.toLong); vs.foreach(str) }
     strs(d.deltaDirs)
     strs(d.removedDirs)
-    // GDT2 integrity trailer: CRC32 (big-endian) over everything above,
-    // magic included. One JDK-intrinsic pass over the buffer (~GB/s) buys
-    // deterministic corruption detection on every future read. Revision 2
-    // (GDT1, the r17 compat target) has no trailer by definition.
-    if (revision >= 3) {
-      val crc = new java.util.zip.CRC32()
-      crc.update(buf, 0, len)
-      val c = crc.getValue
-      ensure(4)
-      buf(len) = (c >>> 24).toByte; buf(len + 1) = (c >>> 16).toByte
-      buf(len + 2) = (c >>> 8).toByte; buf(len + 3) = c.toByte
-      len += 4
-    }
+    // Integrity trailer: CRC32 (big-endian) over everything above, magic
+    // included. One JDK-intrinsic pass over the buffer (~GB/s) buys
+    // deterministic corruption detection on every future read.
+    val crc = new java.util.zip.CRC32()
+    crc.update(buf, 0, len)
+    val c = crc.getValue
+    ensure(4)
+    buf(len) = (c >>> 24).toByte; buf(len + 1) = (c >>> 16).toByte
+    buf(len + 2) = (c >>> 8).toByte; buf(len + 3) = c.toByte
+    len += 4
     java.util.Arrays.copyOf(buf, len)
   }
 }
@@ -654,9 +559,7 @@ object SnapshotLog {
  * manifest (Iceberg's manifest-list move): dir list, per-dir rows, per-dir
  * column statistics. The manifest itself stays O(1) regardless of how many
  * data dirs a long append history accumulates — at 10^5 dirs the inline
- * form made every commit rewrite megabytes of manifest. `dirStats` is the
- * LAST field by construction (tests and tooling that patch stats in place
- * rely on it closing the JSON document).
+ * form made every commit rewrite megabytes of manifest.
  */
 private[graft] case class SnapshotDetail(
     dataDirs: Seq[String],
@@ -695,7 +598,7 @@ private[graft] case class ManifestCore(
     summary: Map[String, String] = Map.empty,
     batchKey: Option[String] = None,
     recentBatchKeys: Seq[String] = Seq.empty,
-    detailFile: Option[String] = None,
+    detailFile: String,
     // Prior commits' detail files whose ADDED dirs still contribute to
     // this snapshot (oldest first; `detailFile` holds this commit's own
     // additions + the cumulative removed set). Lives in the CORE — not the
@@ -708,8 +611,7 @@ private[graft] case class ManifestCore(
     // — the table-format evolution contract (Iceberg's `format-version`):
     // it lives in the JSON core, which EVERY reader era parses, so a
     // too-old reader refuses with a versioned message instead of choking
-    // on bytes it cannot decode. None (pre-marker manifests) means
-    // revision ≤ 2 by construction. See [[SnapshotLog.ReaderRevision]].
+    // on bytes it cannot decode. See [[SnapshotLog.ReaderRevision]].
     minReader: Option[Int] = None)
 
 /**
@@ -901,39 +803,44 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
     * files. Metadata callers ($snapshots, history, batch-key scans,
     * timestamp cutoff selection) need only these; reading the O(dirs)
     * detail for each would double the log reads per call and re-introduce
-    * on the read side the per-operation cost the manifest split removed.
-    * Legacy inline manifests surface the same fields from the full parse. */
+    * on the read side the per-operation cost the manifest split removed. */
   def snapshotsCore(): Seq[ManifestCore] =
     listManifests().flatMap { p =>
-      try Some(parseManifest(new String(store.read(p), StandardCharsets.UTF_8))._1)
+      try Some(readCore(p))
       catch { case e if isMissing(e) => None } // expired mid-read
     }
 
-  /** The ONE place both manifest formats are discriminated: returns the
-    * core view plus, for a LEGACY inline manifest, the already-parsed full
-    * snapshot (so full readers skip a second parse). Core-only and full
-    * readers both layer on this — a format revision has a single home. */
-  private def parseManifest(s: String): (ManifestCore, Option[Snapshot]) = {
+  private def readCore(p: Path): ManifestCore =
+    parseManifest(new String(store.read(p), StandardCharsets.UTF_8))
+
+  /** The ONE place a manifest core is parsed and its format gated.
+    * Core-only and full readers both layer on this — a format revision has
+    * a single home. */
+  private def parseManifest(s: String): ManifestCore = {
     import org.json4s._
-    org.json4s.jackson.JsonMethods.parse(s) \ "detailFile" match {
-      case JString(_) =>
-        val core = Serialization.read[ManifestCore](s)
-        // Format-version gate (the Iceberg `format-version` contract):
-        // refuse a future detail revision HERE, on the always-JSON core,
-        // with a versioned message — never a downstream byte-parse error.
-        core.minReader.filter(_ > SnapshotLog.ReaderRevision).foreach { mr =>
-          throw new IllegalStateException(
-            s"log $logDir requires reader revision >= $mr; this build " +
-              s"supports <= ${SnapshotLog.ReaderRevision} — upgrade the " +
-              "graft library to read this table")
-        }
-        (core, None)
+    val ast = parse(s)
+    // Format-version gate (the Iceberg `format-version` contract): refuse
+    // a future detail revision HERE, on the always-JSON core and before
+    // any other field is interpreted, with a versioned message — never a
+    // downstream byte-parse error.
+    ast \ "minReader" match {
+      case JInt(mr) if mr > SnapshotLog.ReaderRevision =>
+        throw new IllegalStateException(
+          s"log $logDir requires reader revision >= $mr; this build " +
+            s"supports <= ${SnapshotLog.ReaderRevision} — upgrade the " +
+            "graft library to read this table")
       case _ =>
-        val full = Serialization.read[Snapshot](s)
-        (ManifestCore(full.snapshotId, full.parentId, full.committedAt,
-          full.operation, full.schemaJson, full.summary, full.batchKey,
-          full.recentBatchKeys, None), Some(full))
     }
+    // An inline manifest (dir sets in the manifest itself, no side-file
+    // reference) predates the split detail and thus every revision this
+    // build reads: refuse it by name rather than surface a snapshot
+    // without its dirs.
+    if (!(ast \ "detailFile").isInstanceOf[JString])
+      throw new IllegalStateException(
+        s"log $logDir holds an inline manifest (no detailFile); this build " +
+          s"reads only detail revision ${SnapshotLog.ReaderRevision} (GDT2). " +
+          "Logs written before that revision are not readable; rebuild the table.")
+    ast.extract[ManifestCore]
   }
 
   // Head cache keyed by (manifest path, store mtime): a manifest is
@@ -995,8 +902,7 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
     val p = manifestPath(id)
     if (!store.exists(p)) None
     else
-      try Some(parseManifest(
-        new String(store.read(p), StandardCharsets.UTF_8))._1)
+      try Some(readCore(p))
       catch { case e if isMissing(e) => None }
   }
 
@@ -1011,17 +917,13 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
   private[graft] def commitDirDelta(
       childId: Long): Option[(Seq[String], Seq[String], Seq[String])] =
     try {
-      val (cCore, cLegacy) = parseManifest(
-        new String(store.read(manifestPath(childId)), StandardCharsets.UTF_8))
-      if (cLegacy.isDefined || cCore.detailFile.isEmpty) return None
+      val cCore = readCore(manifestPath(childId))
       val pid = cCore.parentId.getOrElse(return None)
-      val (pCore, pLegacy) = parseManifest(
-        new String(store.read(manifestPath(pid)), StandardCharsets.UTF_8))
-      if (pLegacy.isDefined || pCore.detailFile.isEmpty) return None
+      val pCore = readCore(manifestPath(pid))
       if (cCore.detailSegments !=
-          pCore.detailSegments :+ pCore.detailFile.get) return None
-      val cOwn = loadDetail(cCore.detailFile.get)
-      val pOwn = loadDetail(pCore.detailFile.get)
+          pCore.detailSegments :+ pCore.detailFile) return None
+      val cOwn = loadDetail(cCore.detailFile)
+      val pOwn = loadDetail(pCore.detailFile)
       val pRem = pOwn.removedDirs.toSet
       val cRem = cOwn.removedDirs.toSet
       if (!pRem.subsetOf(cRem)) return None // re-add (rollback): full diff
@@ -1119,77 +1021,72 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
     names.map(load)
   }
 
-  /** Parse a manifest in any format: the SEGMENTED form (core + own detail
-    * + prior segments), the plain SPLIT form (core + one self-contained
-    * detail), or the legacy inline form — old logs stay readable without
-    * migration. Segmented compose order is CANONICAL (segments oldest
-    * first, then this commit's additions, removed dirs filtered) — dataDirs
-    * is a set in contract; nothing orders on it (delta ordering lives in
+  /** Parse a manifest: the SEGMENTED form (core + own detail + prior
+    * segments) or the plain SPLIT form (core + one self-contained detail).
+    * Segmented compose order is CANONICAL (segments oldest first, then
+    * this commit's additions, removed dirs filtered) — dataDirs is a set
+    * in contract; nothing orders on it (delta ordering lives in
     * `deltaDirs`, which is always inline and authoritative). */
-  private def readManifest(p: Path): Snapshot =
-    parseManifest(new String(store.read(p), StandardCharsets.UTF_8)) match {
-      case (_, Some(legacyFull)) => legacyFull
-      case (core, None) =>
-        val own = loadDetail(core.detailFile.get)
-        var carriedIndex: Map[Int, Seq[String]] = null
-        val (dataDirs, dirRecords, dirStats) =
-          if (core.detailSegments.isEmpty)
-            (own.dataDirs, own.dirRecords, own.dirStats)
-          else composeIncremental(core, own) match {
-            case Some((dirs, recs, stats, idx)) =>
-              carriedIndex = idx
-              (dirs, recs, stats)
-            case None =>
-              val segs = loadDetails(core.detailSegments)
-              val removed = own.removedDirs.toSet
-              // O(1) map composition (round 17; replaces the single-pass
-              // HashMap rebuild that dominated the cold open together with
-              // the shard parses — ComposeBench: ~0.5-1.2 s of merges at
-              // 10⁶ dirs, gone): segment maps' key sets are pairwise
-              // DISJOINT by the encoder's contract (a commit adds only
-              // dirs absent from every prior segment; a re-added dir stays
-              // in its original segment), so the union is a ConcatDirMap
-              // view and this commit's own adds + the cumulative removed
-              // set ride an OverlayDirMap. No million-entry hash map
-              // exists unless a point `get` asks for one — and then it is
-              // built once and shared via the instance.
-              def layered[V](parts: Seq[Map[String, V]],
-                  ownM: Map[String, V]): Map[String, V] = {
-                val ne = parts.filter(_.nonEmpty).toIndexedSeq
-                val base: Map[String, V] =
-                  if (ne.isEmpty) Map.empty
-                  else if (ne.size == 1) ne.head
-                  else new ConcatDirMap(ne)
-                if (ownM.isEmpty && removed.isEmpty) base
-                else new OverlayDirMap(base, ownM, removed)
-              }
-              val dirs: Seq[String] = {
-                val partsD = segs.map(_.dataDirs) :+ own.dataDirs
-                if (removed.isEmpty) {
-                  // Pure-append chain (incl. every fresh fold): one
-                  // arraycopy pass instead of a Vector rebuild.
-                  val total = partsD.iterator.map(_.size).sum
-                  val arr = new Array[String](total)
-                  var off = 0
-                  partsD.foreach { s => s.copyToArray(arr, off); off += s.size }
-                  scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
-                } else
-                  segs.flatMap(_.dataDirs).filterNot(removed) ++ own.dataDirs
-              }
-              (dirs, layered(segs.map(_.dirRecords), own.dirRecords),
-                layered(segs.map(_.dirStats), own.dirStats))
+  private def readManifest(p: Path): Snapshot = {
+    val core = readCore(p)
+    val own = loadDetail(core.detailFile)
+    var carriedIndex: Map[Int, Seq[String]] = null
+    val (dataDirs, dirRecords, dirStats) =
+      if (core.detailSegments.isEmpty)
+        (own.dataDirs, own.dirRecords, own.dirStats)
+      else composeIncremental(core, own) match {
+        case Some((dirs, recs, stats, idx)) =>
+          carriedIndex = idx
+          (dirs, recs, stats)
+        case None =>
+          val segs = loadDetails(core.detailSegments)
+          val removed = own.removedDirs.toSet
+          // O(1) map composition (round 17; replaces the single-pass
+          // HashMap rebuild that dominated the cold open together with
+          // the shard parses — ComposeBench: ~0.5-1.2 s of merges at
+          // 10⁶ dirs, gone): segment maps' key sets are pairwise
+          // DISJOINT by the encoder's contract (a commit adds only
+          // dirs absent from every prior segment; a re-added dir stays
+          // in its original segment), so the union is a ConcatDirMap
+          // view and this commit's own adds + the cumulative removed
+          // set ride an OverlayDirMap. No million-entry hash map
+          // exists unless a point `get` asks for one — and then it is
+          // built once and shared via the instance.
+          def layered[V](parts: Seq[Map[String, V]],
+              ownM: Map[String, V]): Map[String, V] = {
+            val ne = parts.filter(_.nonEmpty).toIndexedSeq
+            val base: Map[String, V] =
+              if (ne.isEmpty) Map.empty
+              else if (ne.size == 1) ne.head
+              else new ConcatDirMap(ne)
+            if (ownM.isEmpty && removed.isEmpty) base
+            else new OverlayDirMap(base, ownM, removed)
           }
-        val snap = Snapshot(core.snapshotId, core.parentId, core.committedAt,
-          core.operation, core.schemaJson, dataDirs, core.summary,
-          core.batchKey, dirRecords, own.deltaDirs,
-          core.recentBatchKeys, dirStats)
-        if (carriedIndex != null) snap.bucketIndexCarry = carriedIndex
-        if (core.detailFile.isDefined)
-          composedTip = ComposedTip(core.snapshotId,
-            core.detailSegments :+ core.detailFile.get, snap,
-            own.removedDirs.toSet)
-        snap
-    }
+          val dirs: Seq[String] = {
+            val partsD = segs.map(_.dataDirs) :+ own.dataDirs
+            if (removed.isEmpty) {
+              // Pure-append chain (incl. every fresh fold): one
+              // arraycopy pass instead of a Vector rebuild.
+              val total = partsD.iterator.map(_.size).sum
+              val arr = new Array[String](total)
+              var off = 0
+              partsD.foreach { s => s.copyToArray(arr, off); off += s.size }
+              scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
+            } else
+              segs.flatMap(_.dataDirs).filterNot(removed) ++ own.dataDirs
+          }
+          (dirs, layered(segs.map(_.dirRecords), own.dirRecords),
+            layered(segs.map(_.dirStats), own.dirStats))
+      }
+    val snap = Snapshot(core.snapshotId, core.parentId, core.committedAt,
+      core.operation, core.schemaJson, dataDirs, core.summary,
+      core.batchKey, dirRecords, own.deltaDirs,
+      core.recentBatchKeys, dirStats)
+    if (carriedIndex != null) snap.bucketIndexCarry = carriedIndex
+    composedTip = ComposedTip(core.snapshotId,
+      core.detailSegments :+ core.detailFile, snap, own.removedDirs.toSet)
+    snap
+  }
 
   /** One-slot cache of the last composed SPLIT-format snapshot: id, its
     * full detail chain (segments + own detail, in order), the composed
@@ -1264,10 +1161,9 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
   /** ALL detail files a manifest references: its own plus any prior
     * segments (segmented form). DELIBERATELY bare AST field extraction,
     * not [[parseManifest]] — both are CORE fields, so the protection set
-    * for GC/expiry builds from O(retained) small reads (a legacy inline
-    * manifest would otherwise pay a full O(dirs) deserialization just to
-    * learn the fields are absent), and a manifest written by a NEWER
-    * format revision must still yield its references so the orphan sweep
+    * for GC/expiry builds from O(retained) small reads, and a manifest
+    * written by a NEWER format revision (or an older one this build
+    * refuses to read) must still yield its references so the orphan sweep
     * never mistakes its live details for garbage. */
   private def detailRefsOf(p: Path): Seq[String] = {
     import org.json4s._
@@ -1321,11 +1217,10 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
     // one ~147 MB document on one core, and the shard writes themselves
     // fan out. Shards use the ordinary detail naming, so GC/expiry
     // lifecycle (detailRefsOf, the orphan-sweep regex) needs no new case.
-    val rev = SnapshotLog.writerRevision
-    val (detail, segments, ownShards, chainFloor) =
+    val (detail, segments, ownShards) =
       segmentedDetail(snap, deltaHint) match {
-      case Some((d, segs, parentFloor)) =>
-        (d, segs, Seq.empty[(String, SnapshotDetail)], parentFloor)
+      case Some((d, segs)) =>
+        (d, segs, Seq.empty[(String, SnapshotDetail)])
       case None =>
         val n = snap.dataDirs.size
         val k = math.min(16, 1 + (n - 1).max(0) / SnapshotLog.foldShardDirs)
@@ -1333,7 +1228,7 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
           (SnapshotDetail(
             dataDirs = snap.dataDirs, deltaDirs = snap.deltaDirs,
             dirRecords = snap.dirRecords, dirStats = snap.dirStats),
-            Seq.empty[String], Seq.empty[(String, SnapshotDetail)], rev)
+            Seq.empty[String], Seq.empty[(String, SnapshotDetail)])
         else {
           val per = (n + k - 1) / k
           val shards = snap.dataDirs.grouped(per).map { slice =>
@@ -1356,7 +1251,7 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
           (SnapshotDetail(dataDirs = Seq.empty, deltaDirs = snap.deltaDirs,
             dirRecords = snap.dirRecords.filter(kv => !sliced(kv._1)),
             dirStats = snap.dirStats.filter(kv => !sliced(kv._1))),
-            shards.map(_._1), shards, rev)
+            shards.map(_._1), shards)
         }
     }
     val detailName = freshName()
@@ -1380,7 +1275,7 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
           metaPool.submit(new java.util.concurrent.Callable[Boolean] {
             override def call(): Boolean =
               store.tryClaim(logDir.resolve(nm),
-                SnapshotLog.writeDetailBytes(d, rev))
+                SnapshotLog.writeDetailBytes(d))
           })
         }
         // Await ALL claims before judging success: short-circuiting on the
@@ -1401,15 +1296,14 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
         outcomes.forall(_ == Right(true))
     }
     val detailOk = shardsOk && store.tryClaim(logDir.resolve(detailName),
-      SnapshotLog.writeDetailBytes(detail, rev))
+      SnapshotLog.writeDetailBytes(detail))
     if (!detailOk) { cleanupOwn(); return false }
-    // minReader states what a reader of THIS manifest must parse: the
-    // revision just written, floored (for segmented commits) at the
-    // referenced chain's own requirement.
+    // minReader states what a reader of THIS manifest must parse: every
+    // document of the chain is written at ReaderRevision.
     val core = ManifestCore(snap.snapshotId, snap.parentId, snap.committedAt,
       snap.operation, snap.schemaJson, snap.summary, snap.batchKey,
-      snap.recentBatchKeys, Some(detailName), segments,
-      minReader = Some(math.max(rev, chainFloor)))
+      snap.recentBatchKeys, detailName, segments,
+      minReader = Some(SnapshotLog.ReaderRevision))
     val won = store.tryClaim(manifestPath(snap.snapshotId),
       Serialization.write(core).getBytes(StandardCharsets.UTF_8))
     if (!won) cleanupOwn() else SnapshotLog.commitTick.incrementAndGet()
@@ -1422,8 +1316,8 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
    * references the parent's segments + the parent's own detail and records
    * only what changed: added dirs (with their records/stats), the
    * cumulative removed set, and the full delta chain. Self-contained is
-   * chosen — folding the chain back to one document — when the parent is
-   * legacy/inline or expired mid-read, when the chain would exceed the
+   * chosen — folding the chain back to one document — when the parent
+   * expired mid-read, when the chain would exceed the
    * segment cap, or when the encoded delta rivals the live set (a full
    * rewrite like compact/overwrite resets the chain naturally; a small
    * table's churn isn't worth the indirection). Correct for ANY commit
@@ -1436,21 +1330,11 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
   private def segmentedDetail(
       snap: Snapshot,
       deltaHint: Option[DirDelta] = None)
-      : Option[(SnapshotDetail, Seq[String], Int)] =
+      : Option[(SnapshotDetail, Seq[String])] =
     try {
       val pid = snap.parentId.getOrElse(return None)
-      val (pcore, legacy) = parseManifest(
-        new String(store.read(manifestPath(pid)), StandardCharsets.UTF_8))
-      if (legacy.isDefined || pcore.detailFile.isEmpty) return None
-      // The chain's own reader floor: a segmented child keeps referencing
-      // the parent's segments, so its minReader stamp can never drop
-      // below theirs even if this writer is revision-downgraded. A
-      // pre-marker manifest (None) can be anything up to r17's GDT1 —
-      // floor at 2, the highest revision a markerless chain can contain;
-      // overstating a pure-JSON chain is merely stricter, understating a
-      // GDT1 chain would stamp a readability claim the bytes can't honor.
-      val parentFloor = pcore.minReader.getOrElse(2)
-      val segments = pcore.detailSegments :+ pcore.detailFile.get
+      val pcore = readCore(manifestPath(pid))
+      val segments = pcore.detailSegments :+ pcore.detailFile
       if (segments.size > SnapshotLog.maxDetailSegments) return None
       // Hinted path: the caller states the commit's (added, removed) dirs
       // outright — the append family, which writes freshly-named dirs and
@@ -1508,7 +1392,7 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
             .flatMap(a => snap.dirRecords.get(a).map(a -> _)).toMap,
           dirStats = h.added.iterator
             .flatMap(a => snap.dirStats.get(a).map(a -> _)).toMap),
-          segments, parentFloor)))
+          segments)))
       }
       hinted match {
         case Some(out) => return out // verified hint: segment form or fold
@@ -1533,7 +1417,7 @@ final class SnapshotLog(tableRoot: Path, retainVersions: Int = 100,
         removedDirs = removed,
         dirRecords = snap.dirRecords.view.filterKeys(addedSet).toMap,
         dirStats = snap.dirStats.view.filterKeys(addedSet).toMap),
-        segments, parentFloor))
+        segments))
     } catch { case e if isMissing(e) => None } // parent expired — fold
 
   /**

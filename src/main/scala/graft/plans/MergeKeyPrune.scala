@@ -100,8 +100,6 @@ case class MergeKeyPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def keyedCondition(rd: ReplaceData, cond: Expression): Option[Expression] = {
     val conjuncts = splitAnd(cond)
-    if (sys.props.contains("graft.debug.mergePrune"))
-      println(s"GRAFT mergePrune conjuncts:\n${conjuncts.map(c => "  " + c.getClass.getSimpleName + ": " + c).mkString("\n")}")
     // "Already keyed" is decided PER ATTRIBUTE, after the candidate join
     // attribute is chosen (below): a static bound on an UNRELATED target
     // column (e.g. `t.ts >= '2024-01-01' AND t.k = s.k`) must not cost

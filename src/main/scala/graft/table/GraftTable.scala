@@ -106,7 +106,7 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
     * pure-ingest CDC throughput (the footer opens + per-file Hadoop conf
     * copies allocate enough to tax a 32-core saturated write via GC),
     * while a batch pipeline with no reader gains nothing from warm
-    * footers. Kill switch: -Dgraft.serving.prewarm=false. */
+    * footers. */
   private def prewarmServing(rels: Seq[String]): Unit =
     // Dir cap: a commit fanning wider than this (a full rewrite of a huge
     // table) exceeds what the local serving path would read anyway (its
@@ -114,8 +114,7 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
     //-scale tables stay fully covered.
     if (rels.nonEmpty && rels.size <= GraftTable.PrewarmMaxDirs &&
         LocalPointRead.enabled &&
-        GraftTable.recentlyServed(rootKey) &&
-        !sys.props.get("graft.serving.prewarm").contains("false")) {
+        GraftTable.recentlyServed(rootKey)) {
       val abs = rels.map(r => root.resolve(r).toString)
       GraftTable.prewarmPool.execute(() =>
         LocalPointRead.prewarm(servingConf, abs))
@@ -417,8 +416,9 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
         // first-range-plan cost at 10⁶ dirs. Safety: a fill happens only
         // at an exact string match, and an unmatched entry merely leaves
         // nulls (dir kept — pruning stays conservative); a step budget
-        // of 2n bounds misordered sources (legacy JSON maps), which
-        // rebuild via the hash path below, correctness identical.
+        // of 2n bounds misordered sources (plain hash maps, e.g. a
+        // committer's in-memory snapshot), which rebuild via the hash path
+        // below, correctness identical.
         val dirArr = new Array[String](n)
         locally { var i = 0
           head.dataDirs.foreach { d => dirArr(i) = d; i += 1 } }
@@ -1256,15 +1256,13 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
   /** Partial-rewrite merge for bucketed tables: only touched buckets move.
    *
    * One cheap pre-pass over the RAW batch (keys only — dedup cannot change
-   * the key set, so it is skipped here) yields the touched-bucket set, the
-   * broadcast-gate hint, and — for bounded batches under `collectKeys` —
-   * the distinct key set itself, handed to the merge as its anti-join
-   * side so the merge never re-derives it (see the pre-pass note in the
-   * body). An exchange-free variant (one scan subtree per touched bucket
-   * feeding a partition-aligned write) was measured WORSE: each subtree's
-   * generated code embeds its own file paths, so nothing hits the codegen
-   * cache and every merge pays ~n compilations. One scan + one repartition
-   * of the merged output is the plan that amortizes.
+   * the key set, so it is skipped here) yields the touched-bucket set and
+   * the broadcast-gate hint. An exchange-free variant (one scan subtree
+   * per touched bucket feeding a partition-aligned write) was measured
+   * WORSE: each subtree's generated code embeds its own file paths, so
+   * nothing hits the codegen cache and every merge pays ~n compilations.
+   * One scan + one repartition of the merged output is the plan that
+   * amortizes.
    */
   private def commitBucketedMerge(
       head: Snapshot,
@@ -1272,10 +1270,9 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
       key: String,
       n: Int,
       operation: String,
-      mergeFn: (DataFrame, DataFrame, Option[Long], Option[DataFrame]) => DataFrame,
+      mergeFn: (DataFrame, DataFrame, Option[Long]) => DataFrame,
       batchKey: Option[String],
-      rebaseAppends: Boolean = false,
-      collectKeys: Boolean = false): Snapshot = {
+      rebaseAppends: Boolean = false): Snapshot = {
     // `head` is the snapshot the CALLER derived its inputs from — the
     // upsert/delete guard checks (no pending deltas) and compact's chain
     // resolution all speak it. Re-reading log.latest() here instead used
@@ -1298,53 +1295,16 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
     // 33% slower (4.37 s vs 3.28 s) — the chain was never read twice, so
     // the "cheap" precount was pure added work. Keep the forcing pre-pass.
     val tA = System.nanoTime()
-    // Key-collect pre-pass — MEASURED-REJECTED default-off (r19, item 6 of
-    // the r18 verdict's list): the idea was to fold the merge's key-side
-    // derivation into the pre-pass — one narrow job collects the batch's
-    // DISTINCT keys (the same set the anti join's broadcast build collects
-    // to the driver anyway), the touched-bucket set falls out driver-side
-    // via the layout's own hash ([[graft.plans.BucketHash]]), and the keys
-    // go back into the merge as a LocalRelation (keysOverride), so the
-    // merge never re-scans the updates for its key side. Back-to-back
-    // UpsertProbe A/B (sf0.1, 8 buckets, 75k-key batch, quiet waves):
-    // prepass 107-186 ms -> 245-328 ms, merge_write 671-976 -> 836-1107 ms
-    // — a net LOSS. Why: the default pre-pass's groupBy(bucket).count()
-    // collapses map-side to `n` rows (near-zero shuffle/collect), while
-    // the full distinct-key collect shuffles and drags 75k rows to the
-    // driver; and the keys re-scan it eliminates was the broadcast side,
-    // which BroadcastExchange builds asynchronously OFF the merge's
-    // critical path. Kept behind -Dgraft.merge.collectKeys=true (callers
-    // pass `collectKeys` on the micro-batch paths) so the A/B is
-    // reproducible from current code. compact() never opts in: its
-    // pre-pass DELIBERATELY forces the persisted chain resolution (see
-    // below), and its key set is table-sized.
-    val keyProj = updates.select(col(key))
-    val collected: Option[Array[org.apache.spark.sql.Row]] =
-      if (!collectKeys ||
-          !sys.props.get("graft.merge.collectKeys").contains("true")) None
-      else {
-        val cap = graft.dml.Merge.maxBroadcastKeys
-        val rows = keyProj.dropDuplicates(Seq(key))
-          .limit(cap.toInt + 1).collect()
-        if (rows.length <= cap) Some(rows) else None
-      }
-    val (touched: Set[Int], updateRows: Long, keysLocal: Option[DataFrame]) =
-      collected match {
-        case Some(rows) =>
-          val dt = keyProj.schema.head.dataType
-          val tz = spark.sessionState.conf.sessionLocalTimeZone
-          val t = rows.iterator
-            .map(r => graft.plans.BucketHash.bucketId(r.get(0), dt, n, tz))
-            .toSet
-          val local = spark.createDataFrame(
-            java.util.Arrays.asList(rows: _*), keyProj.schema)
-          (t, rows.length.toLong, Some(local))
-        case None =>
-          val bucketCounts = updates.select(bucketId(key, n).as("__b"))
-            .groupBy("__b").count().collect()
-          (bucketCounts.map(_.getInt(0)).toSet,
-            bucketCounts.map(_.getLong(1)).sum, None)
-      }
+    // Key-collect pre-pass — MEASURED-REJECTED (r19): collecting the
+    // batch's DISTINCT keys here and handing them to the merge as its
+    // anti-join side lost to this groupBy(bucket).count(), which collapses
+    // map-side to `n` rows, while the key re-scan it saved builds the
+    // broadcast side asynchronously OFF the merge's critical path
+    // (OPTIMIZATION_r19.md has the A/B).
+    val bucketCounts = updates.select(bucketId(key, n).as("__b"))
+      .groupBy("__b").count().collect()
+    val touched = bucketCounts.map(_.getInt(0)).toSet
+    val updateRows = bucketCounts.map(_.getLong(1)).sum
     val tB = System.nanoTime()
     val (touchedDirs, untouchedDirs) =
       head.dataDirs.partition(d => bucketOfDir(d).exists(touched.contains))
@@ -1352,7 +1312,7 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
     val target =
       if (touchedDirs.isEmpty) emptyDF(st)
       else spark.read.schema(st).parquet(touchedDirs.map(d => root.resolve(d).toString): _*)
-    val merged = mergeFn(target, updates, Some(updateRows), keysLocal)
+    val merged = mergeFn(target, updates, Some(updateRows))
     val next = latestVersion + 1
     val newLeaves = writeBucketedDir(merged, key, n, newDataRel(next))
     val tC = System.nanoTime()
@@ -1701,10 +1661,9 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
       // MOR deltas are pending (those need read-time resolution first).
       case Some((bk, n)) if bk == keyP && !pendingDeltas =>
         commitBucketedMerge(head.get, updatesP, keyP, n, "upsert",
-          (t, u, hint, kOv) => Merge.merge(t, u, keyP, precombineP, opCol,
-            broadcastUpdates, hint, preDeduped = preDeduped,
-            keysOverride = kOv),
-          batchKey, collectKeys = broadcastUpdates)
+          (t, u, hint) => Merge.merge(t, u, keyP, precombineP, opCol,
+            broadcastUpdates, hint, preDeduped = preDeduped),
+          batchKey)
       case _ =>
         val target = head.map(s => ColumnIds.toPhysical(readResolved(s), st0))
           .getOrElse(emptyDF(new StructType()))
@@ -1845,9 +1804,8 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
     bucketSpec match {
       case Some((bk, n)) if bk == key && !head.exists(_.deltaDirs.nonEmpty) =>
         commitBucketedMerge(head.get, keys, key, n, "delete",
-          (t, k, hint, kOv) => Merge.deleteKeys(t, k, key, keysRowsHint = hint,
-            keysOverride = kOv),
-          batchKey = None, collectKeys = true)
+          (t, k, hint) => Merge.deleteKeys(t, k, key, keysRowsHint = hint),
+          batchKey = None)
       case _ =>
         val target = head.map(s => ColumnIds.toPhysical(readResolved(s), st0))
           .getOrElse(emptyDF(new StructType()))
@@ -2400,15 +2358,8 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
         // query results. Merge.merge tolerates the multi-row winning
         // image (anti join removes the key's base rows once; the union
         // adds every winner).
-        // Measurement toggle (CompactProbe sweep, r19): `noPrepass` skips
-        // the persist, so the bucket pre-pass counts a key-only projection
-        // and the merge recomputes the resolution inline — the r15 "split"
-        // variant, reproducible from current code for chain-length A/Bs.
-        val resolved0 = Merge.latestAll(
+        val resolved = Merge.latestAll(
             deltaFrame(head, head.deltaDirs), bk, "__seq").drop("__seq")
-        val resolved =
-          if (sys.props.get("graft.compact.noPrepass").contains("true")) resolved0
-          else resolved0
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // NOTE (r15 investigation): the compact "prepass" in the phase
         // trace is NOT a duplicate chain read — it is the one-time
@@ -2418,7 +2369,7 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
         // SLOWER overall; see the pre-pass comment in commitBucketedMerge.
         try {
           commitBucketedMerge(head, resolved, bk, n, "compact",
-            (t, u, hint, _) => Merge.merge(t, u, bk, None, Some("__op"),
+            (t, u, hint) => Merge.merge(t, u, bk, None, Some("__op"),
               broadcastUpdates = true, updatesRowsHint = hint,
               preDeduped = true),
             batchKey = None, rebaseAppends = true)

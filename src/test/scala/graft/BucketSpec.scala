@@ -37,42 +37,6 @@ class BucketSpec extends AnyFunSuite {
     assert(v2.summary("records").toLong == orders.count())
   }
 
-  test("key-collect pre-pass toggle (graft.merge.collectKeys) is result-identical") {
-    // The measured-rejected r19 pre-pass variant (distinct keys collected
-    // driver-side, merge key side overridden with a LocalRelation) must
-    // stay RESULT-identical to the default shape — including a NULL key,
-    // which never matches the anti join on either path, and a
-    // bucket-subset batch, whose touched set the toggle derives
-    // driver-side via BucketHash instead of the bucket-count aggregate.
-    val o = orders.limit(200)
-    val withNull = o.unionByName(
-      o.limit(1).withColumn("o_orderkey", lit(null).cast("bigint")))
-    def run(): (Seq[String], Long, Seq[org.apache.spark.sql.Row]) = {
-      val t = new GraftTable(spark, TestSpark.tmpDir("bkt-ck-").resolve("t"), "t")
-      t.overwriteBucketed(withNull, "o_orderkey", numBuckets = 8)
-      val updates = o.filter(col("o_orderkey") % 3 === 0)
-        .withColumn("o_orderpriority", lit("CK"))
-        .unionByName(o.limit(1)
-          .withColumn("o_orderkey", lit(null).cast("bigint"))
-          .withColumn("o_orderpriority", lit("CK-NULL")))
-      val v = t.upsert(updates, "o_orderkey")
-      t.deleteKeys(o.filter(col("o_orderkey") % 7 === 0)
-        .select("o_orderkey"), "o_orderkey")
-      val rows = t.read().orderBy(
-        col("o_orderkey").asc_nulls_first, col("o_orderpriority"))
-        .collect().toSeq
-      (v.dataDirs.sorted.map(_.replaceAll("s\\d+-[0-9a-f]+", "sX")),
-        t.read().count(), rows)
-    }
-    val before = run()
-    sys.props("graft.merge.collectKeys") = "true"
-    val after = try run() finally sys.props.remove("graft.merge.collectKeys")
-    assert(after._2 == before._2)
-    assert(after._3 == before._3)
-    // Same touched-bucket decisions: rewritten leaf count matches.
-    assert(after._1.size == before._1.size)
-  }
-
   test("deleteKeys is a partial rewrite; append lands in bucket leaves; spec survives") {
     val t = new GraftTable(spark, TestSpark.tmpDir("bkt-").resolve("t"), "t")
     val v1 = t.overwriteBucketed(orders.filter(col("o_orderkey") < 1000), "o_orderkey", 4)

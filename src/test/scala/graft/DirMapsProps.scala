@@ -138,35 +138,25 @@ object DirMapsProps extends Properties("DirMaps") {
       Prop(parseDetailBytes(writeDetailBytes(d)) == d)
     }
 
-  /** Every writable revision round-trips, INCLUDING over already-parsed
-    * inputs: table paths hand commit the head's parsed maps verbatim
-    * (ArrayDirMap values, PackedStatsMap stats), so a revision-downgraded
-    * writer (-Dgraft.log.detailRevision) must serialize those custom Map
-    * implementations through the legacy JSON path (json4s decompose) and
-    * the GDT1 path exactly as it does plain maps. */
-  property("all writer revisions round-trip, incl. over parsed packed maps") =
-    forAll(detailGen, Gen.oneOf(1, 2, 3)) { (d, rev) =>
+  /** The writer round-trips already-parsed inputs too: table paths hand
+    * commit the head's parsed maps verbatim (ArrayDirMap values,
+    * PackedStatsMap stats), so the GDT2 writer must serialize those custom
+    * Map implementations exactly as it does plain maps. */
+  property("GDT2 writer round-trips over parsed packed maps") =
+    forAll(detailGen) { d =>
       import graft.log.SnapshotLog.{parseDetailBytes, writeDetailBytes}
       val parsed = parseDetailBytes(writeDetailBytes(d)) // packed-map forms
-      val bytes = writeDetailBytes(parsed, rev)
-      // Assert the FULL magic, not just the leading byte: revision 2 must
-      // emit GDT1 exactly (the r17 compat target) — a regression emitting
-      // GDT2 there would still parse here but break real r17 readers.
-      val magicOk = rev match {
-        case 1 => bytes(0) == '{'.toByte
-        case 2 => new String(bytes, 0, 4, "US-ASCII") == "GDT1"
-        case 3 => new String(bytes, 0, 4, "US-ASCII") == "GDT2"
-      }
-      Prop(magicOk) :| s"revision $rev magic" &&
-        Prop(parseDetailBytes(bytes) == d) :| s"revision $rev round-trip"
+      val bytes = writeDetailBytes(parsed)
+      Prop(new String(bytes, 0, 4, "US-ASCII") == "GDT2") :| "magic" &&
+        Prop(parseDetailBytes(bytes) == d) :| "round-trip"
     }
 
   /** Corrupted GDT2 buffers must fail LOUDLY — a structural guard or the
     * CRC32 trailer — never an attempted multi-GB allocation from a bogus
     * varint length, and never a silently different parse. Bit flips,
-    * truncations, and appended garbage all dirty either the magic (falls
-    * to the JSON path, which throws) or the CRC window (deterministic
-    * mismatch), so every mutation must throw. */
+    * truncations, and appended garbage all dirty either the magic
+    * (refused as not GDT2) or the CRC window (deterministic mismatch), so
+    * every mutation must throw. */
   property("corrupted GDT2 buffers fail loudly, never parse silently") =
     forAll(detailGen, Gen.choose(0, Int.MaxValue - 1),
       Gen.choose(0, 7)) { (d, posSeed, bit) =>

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.table.GraftTable
 
 /** Split-manifest format: O(1) manifest documents + O(dirs) side detail
-  * files, legacy inline manifests still readable, side files expired with
-  * their manifests. */
+  * files, legacy inline manifests refused by revision, side files expired
+  * with their manifests. */
 class LogSplitSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -62,7 +62,7 @@ class LogSplitSpec extends AnyFunSuite {
     assert(t.read().count() == orders.filter(col("o_orderkey") < 3100).count())
   }
 
-  test("legacy inline manifests (pre-split) read back unchanged") {
+  test("legacy inline manifests (pre-split) are refused, naming the revision") {
     val t = new GraftTable(spark, TestSpark.tmpDir("legacy-").resolve("t"), "t")
     t.overwrite(orders.filter(col("o_orderkey") < 500))
     val head = t.log.latest().get
@@ -81,9 +81,19 @@ class LogSplitSpec extends AnyFunSuite {
       } finally paths.close()
     Files.write(manifest, Serialization.write(head).getBytes("UTF-8"))
     Files.delete(detail)
-    val reread = t.log.latest().get
-    assert(reread == head, "inline manifest must inflate to the same snapshot")
-    assert(t.read().count() == orders.filter(col("o_orderkey") < 500).count())
+    graft.log.SnapshotLog.clearSharedCaches() // drop the cached split head
+    // Every reader refuses loudly — the full head, the core-only listing,
+    // and a table read — never a snapshot without its dirs.
+    val refusals = Seq(
+      intercept[IllegalStateException](t.log.latest()),
+      intercept[IllegalStateException](t.log.snapshotsCore()),
+      intercept[IllegalStateException](t.read().count()))
+    refusals.foreach { e =>
+      assert(e.getMessage.contains("inline manifest") &&
+        e.getMessage.contains(
+          s"detail revision ${graft.log.SnapshotLog.ReaderRevision}"),
+        e.getMessage)
+    }
   }
 
   test("segmented details: partial rewrites remove, rollbacks re-add, reads exact") {
@@ -220,7 +230,7 @@ class LogSplitSpec extends AnyFunSuite {
       .forall(_.getString(0) == "MOR"))
   }
 
-  // --- streaming detail codec: byte-for-byte dialect parity with json4s ---
+  // --- detail codec: GDT2 only; older encodings refused by revision ---
 
   private val codecFixture = graft.log.SnapshotDetail(
     dataDirs = Seq("d1__bucket=0", "d2__bucket=1", "quote\"back\\slash",
@@ -233,54 +243,56 @@ class LogSplitSpec extends AnyFunSuite {
       "d1__bucket=0" -> Map("ts:min" -> "2024-01-01", "ts:max" -> "2024-06-30"),
       "d2__bucket=1" -> Map.empty[String, String]))
 
-  test("streaming detail codec round-trips and matches the json4s dialect") {
+  /** GDT2 bytes with a VALID CRC32 trailer over `body` (magic included). */
+  private def withCrc(body: Array[Byte]): Array[Byte] = {
+    val crc = new java.util.zip.CRC32()
+    crc.update(body)
+    val c = crc.getValue
+    body ++ Array((c >>> 24).toByte, (c >>> 16).toByte, (c >>> 8).toByte,
+      c.toByte)
+  }
+
+  test("detail codec round-trips GDT2 and refuses JSON and GDT1 documents") {
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
     import graft.log.SnapshotLog.{parseDetailBytes, writeDetailBytes}
-    // Round-trip through the binary pair (round-17 on-disk form), and the
-    // writer really emits binary (magic GDT1) — its maps are array-backed
-    // views, so equality here also exercises ArrayDirMap vs plain Map.
+    // The writer emits GDT2 — magic, then a CRC32 trailer over everything
+    // before it — and its maps parse back as array-backed views, so
+    // equality here also exercises ArrayDirMap vs plain Map.
     val binary = writeDetailBytes(codecFixture)
     assert(binary.take(4).toSeq == Seq[Byte]('G', 'D', 'T', '2'))
+    assert(withCrc(binary.dropRight(4)).toSeq == binary.toSeq,
+      "the trailer must be the CRC32 of the document body")
     assert(parseDetailBytes(binary) == codecFixture)
-    // r17-era GDT1 documents (same body, no CRC trailer) still parse: a
-    // GDT1 file is exactly the GDT2 body with the old magic.
+    // Pre-revision-3 documents are refused by name, never parsed: an r17
+    // GDT1 file (the GDT2 body with the old magic and no trailer), a
+    // json4s-written detail (the pre-r17 form) and a minimal JSON document.
     val gdt1 = binary.dropRight(4)
     gdt1(3) = '1'
-    assert(parseDetailBytes(gdt1) == codecFixture)
-    // json4s-written bytes (the pre-round-16 on-disk form) parse identically
-    // through the streaming reader — no dialect drift on old tables.
-    val legacy = org.json4s.jackson.Serialization.write(codecFixture)
+    val json = org.json4s.jackson.Serialization.write(codecFixture)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    assert(parseDetailBytes(legacy) == codecFixture)
-    // The round-16 streaming-JSON writer's output (what existing tables
-    // hold) parses identically — reconstructed here via json4s, whose
-    // dialect the r16 writer matched byte-for-byte by prior rounds' tests.
-    // NOTE: the binary format is a forward-only revision — readers older
-    // than round 17 cannot parse details written by this code; old logs
-    // stay fully readable here.
-    // Defaults: a minimal document (old writer, fewer fields) still parses.
-    assert(parseDetailBytes("""{"dataDirs":["only"]}""".getBytes) ==
-      graft.log.SnapshotDetail(Seq("only")))
-    // Forward-compat: unknown fields skip, scalar or nested.
-    assert(parseDetailBytes(
-      ("""{"dataDirs":["a"],"future":{"x":[1,2,{"y":3}]},""" +
-        """"flag":true,"deltaDirs":["d"]}""").getBytes) ==
-      graft.log.SnapshotDetail(Seq("a"), deltaDirs = Seq("d")))
-    // Malformed bytes surface as a parse failure, not silence.
-    intercept[Exception](parseDetailBytes("not json".getBytes))
+    Seq("GDT1" -> gdt1, "JSON" -> json,
+        "JSON" -> """{"dataDirs":["only"]}""".getBytes).foreach {
+      case (era, bytes) =>
+        val e = intercept[IllegalStateException](parseDetailBytes(bytes))
+        assert(e.getMessage.contains(era) &&
+          e.getMessage.contains("detail revision 3"), e.getMessage)
+    }
+    // Arbitrary bytes are refused as well, not silently parsed.
+    intercept[IllegalStateException](parseDetailBytes("not json".getBytes))
     // Empty detail round-trips (a fold of an empty table).
     val empty = graft.log.SnapshotDetail(Seq.empty)
     assert(parseDetailBytes(writeDetailBytes(empty)) == empty)
-    // Corrupt binary fails LOUDLY: truncation mid-document and a count
-    // larger than the document are parse failures, never a silent
-    // wrong/partial detail or a multi-GB allocation attempt.
+    // Corrupt binary fails LOUDLY: truncation mid-document is a parse
+    // failure, never a silent wrong/partial detail.
     intercept[Exception](parseDetailBytes(binary.take(binary.length / 2)))
-    // magic + varint(2^20) dictionary count with nothing behind it: the
-    // count guard must refuse before any allocation is attempted.
-    val bigCount = Array[Byte]('G', 'D', 'T', '1',
-      0x80.toByte, 0x80.toByte, 0x40)
-    intercept[Exception](parseDetailBytes(bigCount))
-    // GDT2's CRC trailer names corruption deterministically: any flipped
+    // magic + varint(2^20) dictionary count with nothing behind it, under
+    // a VALID CRC so the checksum passes: the count guard itself must
+    // refuse before any allocation is attempted.
+    val bigCount = withCrc(Array[Byte]('G', 'D', 'T', '2',
+      0x80.toByte, 0x80.toByte, 0x40))
+    val guard = intercept[IllegalArgumentException](parseDetailBytes(bigCount))
+    assert(guard.getMessage.contains("count/length 1048576"), guard.getMessage)
+    // The CRC trailer names corruption deterministically: any flipped
     // body byte fails with the checksum message BEFORE body decoding can
     // act on the damaged bytes.
     val flipped = binary.clone()
@@ -322,76 +334,45 @@ class LogSplitSpec extends AnyFunSuite {
     assert(new SnapshotLog(root).latest().get.dataDirs == Seq("data/x"))
   }
 
-  test("writer revision knob: downgraded commits stay readable and stamp " +
-      "their revision; a segmented commit floors at the chain's") {
+  test("segmented, folded and markerless-parent commits all stamp the " +
+      "reader revision") {
     import graft.log.SnapshotLog
     val root = TestSpark.tmpDir("wrev-").resolve("t")
     def rawCore(id: Long): String = new String(
       java.nio.file.Files.readAllBytes(
         root.resolve("_log").resolve(f"v$id%016d.json")),
       java.nio.charset.StandardCharsets.UTF_8)
-    // Commit 1 at the CURRENT revision: the chain now requires revision 3.
     val log = new SnapshotLog(root)
     val s1 = log.commit("create", "{}",
       Seq("data/a"), dirRecords = Map("data/a" -> 1L),
       dirStats = Map("data/a" -> Map("id:min" -> "1", "id:max" -> "9")))
     assert(rawCore(s1.snapshotId).contains(""""minReader":3"""))
-    sys.props("graft.log.detailRevision") = "2"
-    try {
-      // Segmented child written as GDT1: readable, but the stamp must NOT
-      // drop below the referenced chain's revision-3 segments.
-      val s2 = log.commit("append", "{}", Seq("data/a", "data/b"),
-        dirRecords = Map("data/b" -> 2L))
-      assert(rawCore(s2.snapshotId).contains(""""minReader":3"""))
-      val got = new SnapshotLog(root).latest().get
-      assert(got.dataDirs.sorted == Seq("data/a", "data/b"))
-      assert(got.dirStats("data/a")("id:max") == "9")
-      // A wide overwrite FOLDS self-contained: everything is rewritten at
-      // the downgraded revision, so the floor genuinely drops to 2.
-      val wide = (0 until 20).map(i => s"data/x$i")
-      val s3 = log.commit("overwrite", "{}", wide,
-        dirRecords = wide.map(_ -> 1L).toMap)
-      assert(rawCore(s3.snapshotId).contains(""""minReader":2"""))
-      // Revision 1 folds write legacy JSON — the pre-r17 escape hatch.
-      sys.props("graft.log.detailRevision") = "1"
-      val s4 = log.commit("overwrite", "{}", Seq("data/c"),
-        dirRecords = Map("data/c" -> 3L))
-      assert(rawCore(s4.snapshotId).contains(""""minReader":1"""))
-      val listing = java.nio.file.Files.list(root.resolve("_log"))
-      val sawJson =
-        try {
-          val details = listing.iterator()
-          var json = false
-          while (details.hasNext) {
-            val p = details.next()
-            if (p.getFileName.toString.startsWith(f"d${s4.snapshotId}%016d")) {
-              val b = java.nio.file.Files.readAllBytes(p)
-              json = b.nonEmpty && b(0) == '{'
-            }
-          }
-          json
-        } finally listing.close()
-      assert(sawJson, "revision-1 details must be legacy JSON documents")
-      assert(new SnapshotLog(root).latest().get.dataDirs == Seq("data/c"))
-      // MARKERLESS parent (pre-r18 manifest, no minReader field): the
-      // floor must assume the worst a markerless chain can contain (GDT1,
-      // revision 2) — a revision-1 writer segmenting over it must NOT
-      // stamp 1, which would claim JSON readability for binary segments.
-      val mPath = root.resolve("_log")
-        .resolve(f"v${s4.snapshotId}%016d.json")
-      val stripped = new String(
-        java.nio.file.Files.readAllBytes(mPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .replaceAll(""","minReader":\d+""", "")
-      assert(!stripped.contains("minReader"))
-      java.nio.file.Files.write(mPath, stripped.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      SnapshotLog.clearSharedCaches() // drop the cached (path,mtime) head
-      val s5 = log.commit("append", "{}", Seq("data/c", "data/d"),
-        dirRecords = Map("data/d" -> 4L))
-      assert(rawCore(s5.snapshotId).contains(""""minReader":2"""),
-        s"markerless parent must floor the stamp at 2: ${rawCore(s5.snapshotId)}")
-    } finally sys.props.remove("graft.log.detailRevision")
+    // Segmented child: stamped 3 and readable through the chain.
+    val s2 = log.commit("append", "{}", Seq("data/a", "data/b"),
+      dirRecords = Map("data/b" -> 2L))
+    assert(rawCore(s2.snapshotId).contains(""""minReader":3"""))
+    val got = new SnapshotLog(root).latest().get
+    assert(got.dataDirs.sorted == Seq("data/a", "data/b"))
+    assert(got.dirStats("data/a")("id:max") == "9")
+    // A wide overwrite FOLDS self-contained, and is stamped the same.
+    val wide = (0 until 20).map(i => s"data/x$i")
+    val s3 = log.commit("overwrite", "{}", wide,
+      dirRecords = wide.map(_ -> 1L).toMap)
+    assert(rawCore(s3.snapshotId).contains(""""minReader":3"""))
+    // A parent manifest WITHOUT the marker does not lower a child's stamp:
+    // the stamp is the revision this build writes, never inherited.
+    val mPath = root.resolve("_log").resolve(f"v${s3.snapshotId}%016d.json")
+    val stripped = rawCore(s3.snapshotId).replaceAll(""","minReader":\d+""", "")
+    assert(!stripped.contains("minReader"))
+    java.nio.file.Files.write(mPath, stripped.getBytes(
+      java.nio.charset.StandardCharsets.UTF_8))
+    SnapshotLog.clearSharedCaches() // drop the cached (path,mtime) head
+    val s4 = log.commit("append", "{}", wide :+ "data/d",
+      dirRecords = Map("data/d" -> 4L))
+    assert(rawCore(s4.snapshotId).contains(""""minReader":3"""),
+      rawCore(s4.snapshotId))
+    assert(new SnapshotLog(root).latest().get.dataDirs.toSet ==
+      (wide :+ "data/d").toSet)
   }
 
   test("a fold past the shard threshold writes parallel shards, reads exact") {

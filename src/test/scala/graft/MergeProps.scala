@@ -67,25 +67,6 @@ object MergeProps extends Properties("Merge") {
         canon4(viaWindow) == canon4(viaMaxBy)
     }
 
-  property("latestAllJoinBack == latestAll rank window, ties and nulls included") =
-    Prop.forAll(batchGen) { u =>
-      // Duplicate (key, precombine) pairs are common under this generator
-      // (ver in 1..5 over ~13 keys), so ties AT the max are exercised; a
-      // sprinkle of NULL precombines checks desc-NULLS-LAST vs null-safe
-      // equality (all-null groups keep every row, mixed groups drop nulls).
-      val rows = u.zipWithIndex.map { case ((k, v, s), i) =>
-        (k, if (i % 5 == 2) None else Some(v), s)
-      }
-      val d = rows.toDF("id", "ver", "payload")
-      def canon3(x: org.apache.spark.sql.DataFrame) =
-        x.collect().map(r => (r.getLong(0), Option(r.get(1)), r.getString(2))).toList
-          .groupBy(identity).view.mapValues(_.size).toMap // multiset: ties keep every row
-      val viaJoin = Merge.latestAllJoinBack(d, "id", "ver")
-      val viaWindow = Merge.latestAll(d, "id", "ver")
-      viaJoin.columns.toSeq == d.columns.toSeq &&
-        canon3(viaJoin) == canon3(viaWindow)
-    }
-
   property("delete then re-check: deleted keys are absent, others untouched") =
     Prop.forAll(batchGen, Gen.someOf(0L to 12L)) { (t, dels) =>
       val target = df(t).dropDuplicates(Seq("id"))

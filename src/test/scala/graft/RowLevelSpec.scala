@@ -139,9 +139,10 @@ class RowLevelSpec extends AnyFunSuite {
     // not cost the merge its bucket-key IN derivation — only a static
     // In/bound on the DERIVED attribute itself declines (idempotence).
     // In the current optimizer phase ordering the static bound stays
-    // inside the Exists' join condition (verified via
-    // -Dgraft.debug.mergePrune), so this freezes the wanted behavior for
-    // any future phase that pulls outer-only predicates to the top level.
+    // inside the Exists' join condition (verified by printing the
+    // conjuncts MergeKeyPrune.keyedCondition receives), so this freezes
+    // the wanted behavior for any future phase that pulls outer-only
+    // predicates to the top level.
     val (cat, _) = freshCat()
     ConnectorQueries.ingestBucketed(spark, cat, "orders", orders, "o_orderkey", 8)
     orders.filter(col("o_orderkey") <= 40)
