@@ -5,7 +5,9 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graft.RowJson
+import org.apache.spark.sql.types.StructType
 
 /**
  * HTTP transport for the serving surface — the runnable counterpart of the
@@ -160,15 +162,19 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
       java.net.URLDecoder.decode(parts(1), "UTF-8"))
   }
 
-  /** Render `limit` rows as `{"columns":[...],"rows":[{...},...]}` — the
-    * JSON face of the reference's cursor description + fetchall
-    * (`api_poc.py:221-224`). toJSON serializes row-by-row on executors. */
-  private def dfJson(df: DataFrame, limit: Int): String = {
-    val cols = df.columns.map(c => "\"" + c.replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
-    val rows = df.limit(limit).toJSON.collect().mkString("[", ",", "]")
-    s"""{"columns":$cols,"rows":$rows}"""
-  }
+  /** Render `limit` rows of a LAZY frame as `{"columns":[...],"rows":
+    * [{...},...]}` — the JSON face of the reference's cursor description +
+    * fetchall (`api_poc.py:221-224`). toJSON serializes row-by-row on
+    * executors: one Spark job per call. Only for frames that need a plan
+    * anyway (`/query`, `/data`, `/view`, ...); rows the driver already
+    * holds go through [[rowsJson]]. */
+  private def dfJson(df: DataFrame, limit: Int): String =
+    RowJson.document(df.columns.toSeq, df.limit(limit).toJSON.collect().toSeq)
+
+  /** [[dfJson]]'s reply, byte for byte, for driver-side rows: encoded on
+    * the calling thread, no DataFrame, no plan, no Spark job. */
+  private def rowsJson(schema: StructType, rows: Seq[Row]): String =
+    RowJson.render(session.catalog.spark, schema, rows)
 
   /** One JSON string literal, fully escaped (quotes, backslashes, control
     * chars) — for splicing user-supplied text (constraint SQL) into
@@ -345,23 +351,18 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
   // non-HTML client gets the row as JSON (the same shape as /data).
   handle("/edit") { ex =>
     val (t, id) = tableAndId(ex, "/edit")
-    val table = session.catalog.table(t)
-    val pk = table.defaultPk
-    val idVal = graft.functions.Coerce.coerce(id, table.schema(pk).dataType)
-    // Serving path when the table is bucketed by the pk (same guard the
-    // shell uses): driver-side ms-class read, including under pending MOR
-    // deltas — a full resolving scan only for unbucketed/odd-keyed tables.
-    val rowDf =
-      if (table.bucketSpec.exists(_._1 == pk)) table.lookupKey(idVal).limit(1)
-      else table.read()
-        .filter(org.apache.spark.sql.functions.col(pk) === idVal).limit(1)
-    if (!wantsHtml(ex)) dfJson(rowDf, 1)
+    // Key, schema, bucket spec and row from ONE head read. A table bucketed
+    // by its key answers from driver-side rows — millisecond class, no
+    // Spark job, including under pending MOR deltas; unbucketed or
+    // odd-keyed tables run a filtered resolving read.
+    val found = session.catalog.table(t).lookupPk(id, 1)
+    if (!wantsHtml(ex)) rowsJson(found.schema, found.rows)
     else {
-      val row = rowDf.collect().headOption.getOrElse(
-        throw new NoSuchElementException(s"no row with $pk=$id in $t"))
-      val fields = table.schema.fieldNames.map { c =>
-        val v = Option(row.getAs[Any](c)).map(escHtml).getOrElse("")
-        val ro = if (c == pk) " readonly" else ""
+      val row = found.rows.headOption.getOrElse(
+        throw new NoSuchElementException(s"no row with ${found.key}=$id in $t"))
+      val fields = found.schema.fieldNames.zipWithIndex.map { case (c, i) =>
+        val v = Option(row.get(i)).map(escHtml).getOrElse("")
+        val ro = if (c == found.key) " readonly" else ""
         s"""<label>${escHtml(c)}</label><input type="text" name="${escHtml(c)}" value="$v"$ro>"""
       }.mkString("\n")
       val form =
@@ -611,15 +612,11 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
     require(lst.fieldNames.contains(c), s"no such column $c")
     val v = graft.functions.Coerce.coerce(raw, lst(c).dataType)
     // serving path: materialized rows, zero jobs steady-state (driver-side
-    // stats + cached-bloom pruning + footer-cached decode). The JSON face
-    // is NOT free: wrapping the rows in a LocalRelation and rendering it
-    // through dfJson (limit + toJSON.collect) plans and runs one Spark job
-    // per call.
-    val rows = table.readPointRows(c, v)
-    import scala.jdk.CollectionConverters._
-    val st = org.apache.spark.sql.types.StructType(
-      lst.fields.map(_.copy(nullable = true)))
-    dfJson(table.spark.createDataFrame(rows.take(maxRows).asJava, st), maxRows)
+    // stats + cached-bloom pruning + footer-cached decode), encoded to JSON
+    // on this thread — no plan, no job. Only readPointRows' fallback to
+    // the distributed readPoint (pending deltas, over the byte budget)
+    // runs one.
+    rowsJson(lst, table.readPointRows(c, v).take(maxRows))
   }
 
   // Build (`?rebuild=true`) or incrementally refresh the per-dir bloom
@@ -638,8 +635,9 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
 
   handle("/snapshots") { ex =>
     val t = pathArg(ex, "/snapshots")
-    dfJson(session.catalog.table(t).snapshotsDF
-      .orderBy(org.apache.spark.sql.functions.desc("snapshot_id")), maxRows)
+    // Metadata rows the driver already holds: newest first, no job.
+    rowsJson(graft.table.GraftTable.SnapshotsSchema,
+      session.catalog.table(t).snapshotRows.sortBy(r => -r.getLong(0)).take(maxRows))
   }
 
   handle("/diff") { ex =>

@@ -127,8 +127,10 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
   private def markServed(): Unit =
     GraftTable.servedTables.put(rootKey, System.currentTimeMillis())
 
-  def schema: StructType =
-    log.latest().map(s => DataType.fromJson(s.schemaJson).asInstanceOf[StructType])
+  def schema: StructType = schemaOf(log.latest())
+
+  private def schemaOf(head: Option[Snapshot]): StructType =
+    head.map(s => DataType.fromJson(s.schemaJson).asInstanceOf[StructType])
       .getOrElse(new StructType())
 
   def latestVersion: Long = log.latest().map(_.snapshotId).getOrElse(0L)
@@ -836,14 +838,15 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
 
   /** The `$snapshots` metadata relation (`api_poc.py:490-492`). */
   def snapshotsDF: DataFrame = {
-    // Core-only manifest reads: the metadata relation never needs the
-    // O(dirs) detail files.
-    val rows = log.snapshotsCore().map { s =>
-      (s.snapshotId, s.parentId, s.committedAt, s.operation,
-        s.summary.get("records").map(_.toLong))
-    }
-    import spark.implicits._
-    rows.toDF("snapshot_id", "parent_id", "committed_at", "operation", "records")
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(snapshotRows.asJava, GraftTable.SnapshotsSchema)
+  }
+
+  /** [[snapshotsDF]]'s rows, driver-side, in log order. Core-only manifest
+    * reads: the metadata relation never needs the O(dirs) detail files. */
+  def snapshotRows: Seq[Row] = log.snapshotsCore().map { s =>
+    Row(s.snapshotId, s.parentId.map(Long.box).orNull, s.committedAt,
+      s.operation, s.summary.get("records").map(r => Long.box(r.toLong)).orNull)
   }
 
   /**
@@ -993,11 +996,17 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
     * The name heuristic alone is a trap on tables carrying several
     * `*_id` columns (an events table keyed `event_id` but carrying
     * `user_id` would default to the non-unique `user_id`). */
-  def defaultPk: String = bucketSpec.map(_._1)
-    .filter(schema.fieldNames.contains)
-    .map(ColumnIds.logicalFor(schema, _)) // user-visible name of the key
-    .getOrElse(graft.functions.Identifiers.findIdCol(
-      logicalSchema.fieldNames.toSeq))
+  def defaultPk: String = defaultPkOf(log.latest())
+
+  /** [[defaultPk]] of one head snapshot (one log read for the caller). */
+  private def defaultPkOf(head: Option[Snapshot]): String = {
+    val st = schemaOf(head)
+    head.flatMap(bucketSpecOf).map(_._1)
+      .filter(st.fieldNames.contains)
+      .map(ColumnIds.logicalFor(st, _)) // user-visible name of the key
+      .getOrElse(graft.functions.Identifiers.findIdCol(
+        ColumnIds.logicalSchema(st).fieldNames.toSeq))
+  }
 
   private def bucketSpecOf(s: Snapshot): Option[(String, Int)] =
     for {
@@ -1852,49 +1861,79 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
   }
 
   /**
-   * Key-equality lookup with bucket pruning: on a bucketed table the key's
-   * bucket is computed driver-side and ONLY that bucket's leaf dirs are
-   * scanned — at 1000 executors × 100 TB this turns a point lookup into a
-   * 1/numBuckets scan (plus parquet footer min/max skipping within it).
+   * The ONE key-lookup path choice behind [[lookupKey]], [[lookupKeyRows]]
+   * and [[lookupPk]], made from ONE head snapshot: schema, bucket spec,
+   * dirs and delta chain all come from `head` — re-reading the log per
+   * field cost a log listing each, a measurable slice of a
+   * millisecond-class serving call, and could observe different snapshots
+   * across a concurrent commit.
    *
-   * Serving fast path: when the pruned bucket is small (≤ 64 MB by
-   * default), the driver reads it directly with Spark's own vectorized
-   * parquet reader — zero Spark jobs, no per-key codegen, millisecond
-   * class ([[LocalPointRead]]). Larger buckets, nested schemas, or any
-   * local-read failure fall back to the distributed scan below, which
-   * remains the plan of record at scale.
+   * Right = the driver-side answer: the rows, labeled positionally with
+   * [[servedSchema]]. Left = the lazy distributed fallback (unbucketed
+   * table, nested schema, byte cap exceeded, any local-read failure),
+   * already under logical names.
    */
-  /** The bucket-pruned lookup context when the fast path applies: schema,
-    * the key's bucket dirs (absolute), and the bucket key column. ONE
-    * manifest read for the whole call — re-deriving schema / bucketSpec /
-    * head separately cost three log reads per point lookup, a measurable
-    * slice of a millisecond-class serving call. None when the table is
-    * unbucketed or MOR deltas pend (a delta could hold a newer image or
-    * tombstone for the key — resolution must go through the full read). */
-  private def prunedLookupCtx(value: Any): Option[(StructType, Seq[String], String)] =
-    log.latest().flatMap { head =>
-      bucketSpecOf(head) match {
-        case Some((bk, n)) if head.deltaDirs.isEmpty =>
-          val st = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-          val b = driverBucketId(value, st(bk).dataType, n)
-          // Snapshot-cached bucket index: O(dirs-in-bucket) per lookup,
-          // not an O(dirs) filter — the term that dominated warm serving
-          // latency at 100k+ dirs.
-          Some((st, head.dataDirsByBucket.getOrElse(b, Nil)
-            .map(d => root.resolve(d).toString), bk))
-        case _ => None
-      }
+  private def keyLookup(head: Option[Snapshot], value: Any)
+      : Either[DataFrame, (StructType, Seq[Row])] = {
+    markServed()
+    head match {
+      case None => Left(lookupViaRead(head, value))
+      case Some(h) =>
+        val st = DataType.fromJson(h.schemaJson).asInstanceOf[StructType]
+        def served(rows: Seq[Row]): Either[DataFrame, (StructType, Seq[Row])] = {
+          val out = servedSchema(st)
+          Right(out -> (if (!ColumnIds.hasMapping(st)) rows
+            else rows.map(r => new org.apache.spark.sql.catalyst.expressions
+              .GenericRowWithSchema(r.toSeq.toArray, out))))
+        }
+        bucketSpecOf(h) match {
+          case Some((bk, n)) if h.deltaDirs.isEmpty =>
+            // Snapshot-cached bucket index: O(dirs-in-bucket) per lookup,
+            // not an O(dirs) filter — the term that dominated warm serving
+            // latency at 100k+ dirs.
+            val dirs = h.dataDirsByBucket
+              .getOrElse(driverBucketId(value, st(bk).dataType, n), Nil)
+              .map(d => root.resolve(d).toString)
+            if (dirs.isEmpty) served(Seq.empty)
+            else LocalPointRead.lookupRows(spark, servingConf, dirs, st, bk, value) match {
+              case Some(rows) => served(rows)
+              case None => Left(ColumnIds.toLogical(spark.read.schema(st)
+                .parquet(dirs: _*).filter(col(bk) === lit(value)), st))
+            }
+          // A pending delta could hold a newer image or tombstone for the
+          // key: resolve it driver-side, or through the resolving read.
+          case _ =>
+            (if (h.deltaDirs.isEmpty) None else morServingRows(h, value))
+              .map(served).getOrElse(Left(lookupViaRead(head, value)))
+        }
     }
+  }
+
+  /** The schema driver-side lookup rows are labeled with: the head's
+    * LOGICAL schema (renames applied, as [[read]] shows them) with every
+    * field nullable. That mirrors what a file scan of the same snapshot
+    * reports (file sources force nullable): rows here can hold legitimate
+    * nulls — evolution padding — even for columns the stored schema
+    * believes non-nullable, and a LocalRelation trusts the flag it is
+    * handed (a null under nullable=false reads as 0). */
+  private def servedSchema(st: StructType): StructType =
+    StructType(ColumnIds.logicalSchema(st).fields.map(_.copy(nullable = true)))
 
   /** The slow-path lookup. Bucketed tables route through [[lookupKeys]],
     * which stays bucket-pruned on both sides of a pending delta chain —
     * only an UNBUCKETED table pays the full resolving read here. */
-  private def lookupViaRead(value: Any): DataFrame = bucketSpec match {
-    case Some(_) => lookupKeys(Seq(value))
-    case None =>
-      val bk = graft.functions.Identifiers.findIdCol(schema.fieldNames.toSeq)
-      read().filter(col(bk) === lit(value))
-  }
+  private def lookupViaRead(head: Option[Snapshot], value: Any): DataFrame =
+    if (head.flatMap(bucketSpecOf).isDefined) lookupKeys(Seq(value))
+    else {
+      val bk = graft.functions.Identifiers.findIdCol(
+        ColumnIds.logicalSchema(schemaOf(head)).fieldNames.toSeq)
+      readWhere(head, bk, value)
+    }
+
+  /** `head`'s resolved rows whose (logical) `column` equals `value`. */
+  private def readWhere(head: Option[Snapshot], column: String, value: Any): DataFrame =
+    head.map(readResolved).getOrElse(emptyDF(schemaOf(head)))
+      .filter(col(column) === lit(value))
 
   /**
    * Driver-side serving lookup under PENDING merge-on-read deltas — the
@@ -2018,34 +2057,24 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  def lookupKey(value: Any): DataFrame = { markServed(); prunedLookupCtx(value) } match {
-    case Some((st, dirs, bk)) =>
-      if (dirs.isEmpty) emptyDF(st)
-      else LocalPointRead.lookupRows(spark, servingConf, dirs, st, bk, value) match {
-        case Some(rows) =>
-          import scala.jdk.CollectionConverters._
-          // asNullable mirrors what a file scan of the same snapshot
-          // reports (file sources force nullable): rows here can hold
-          // legitimate nulls — evolution padding — even for columns the
-          // stored schema believes non-nullable, and a LocalRelation trusts
-          // the flag it is handed (a null under nullable=false reads as 0).
-          spark.createDataFrame(rows.asJava,
-            StructType(st.fields.map(_.copy(nullable = true))))
-        case None =>
-          spark.read.schema(st).parquet(dirs: _*).filter(col(bk) === lit(value))
-      }
-    case None =>
-      // ONE head read serves both the resolution and the result schema —
-      // a separate `schema` call could observe a different snapshot.
-      val headOpt = log.latest().filter(_.deltaDirs.nonEmpty)
-      headOpt.flatMap(h => morServingRows(h, value).map(h -> _)) match {
-        case Some((h, rows)) =>
-          import scala.jdk.CollectionConverters._
-          val st = DataType.fromJson(h.schemaJson).asInstanceOf[StructType]
-          spark.createDataFrame(rows.asJava,
-            StructType(st.fields.map(_.copy(nullable = true))))
-        case None => lookupViaRead(value)
-      }
+  /**
+   * Key-equality lookup with bucket pruning: on a bucketed table the key's
+   * bucket is computed driver-side and ONLY that bucket's leaf dirs are
+   * scanned — at 1000 executors × 100 TB this turns a point lookup into a
+   * 1/numBuckets scan (plus parquet footer min/max skipping within it).
+   *
+   * Serving fast path: when the pruned bucket is small (≤ 64 MB by
+   * default), the driver reads it directly with Spark's own vectorized
+   * parquet reader — zero Spark jobs, no per-key codegen, millisecond
+   * class ([[LocalPointRead]]). Larger buckets, nested schemas, or any
+   * local-read failure fall back to a distributed pruned scan, which
+   * remains the plan of record at scale.
+   */
+  def lookupKey(value: Any): DataFrame = keyLookup(log.latest(), value) match {
+    case Right((st, rows)) =>
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.asJava, st)
+    case Left(df) => df
   }
 
   /**
@@ -2055,16 +2084,34 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
    * construction + first-collect query-execution overhead (~20 ms) that
    * [[lookupKey]].collect() pays on top of the same driver-side read.
    */
-  def lookupKeyRows(value: Any): Seq[Row] = { markServed(); prunedLookupCtx(value) } match {
-    case Some((st, dirs, bk)) =>
-      if (dirs.isEmpty) Seq.empty
-      else LocalPointRead.lookupRows(spark, servingConf, dirs, st, bk, value)
-        .getOrElse(spark.read.schema(st).parquet(dirs: _*)
-          .filter(col(bk) === lit(value)).collect().toSeq)
-    case None =>
-      log.latest().filter(_.deltaDirs.nonEmpty)
-        .flatMap(morServingRows(_, value))
-        .getOrElse(lookupViaRead(value).collect().toSeq)
+  def lookupKeyRows(value: Any): Seq[Row] = keyLookup(log.latest(), value) match {
+    case Right((_, rows)) => rows
+    case Left(df) => df.collect().toSeq
+  }
+
+  /**
+   * Rows-first lookup by the table's default key ([[defaultPk]]) — the
+   * record read behind an edit page (`api_poc.py:648-702`). ONE head read
+   * yields the key's logical name, the logical schema labeling the rows
+   * (an empty answer still carries its columns) and at most `limit` rows. `raw` is the key as text, coerced to the key
+   * column's type. A table bucketed by that key answers on
+   * [[lookupKey]]'s path (driver-side rows, no Spark job when the serving
+   * preconditions hold); any other table runs a filtered resolving read.
+   */
+  def lookupPk(raw: String, limit: Int): GraftTable.KeyRows = {
+    val head = log.latest()
+    val st = schemaOf(head)
+    val pk = defaultPkOf(head)
+    val value = graft.functions.Coerce.coerce(raw,
+      ColumnIds.logicalSchema(st)(pk).dataType)
+    val answer =
+      if (head.flatMap(bucketSpecOf).exists(_._1 == ColumnIds.physicalFor(st, pk)))
+        keyLookup(head, value)
+      else Left(readWhere(head, pk, value))
+    answer match {
+      case Right((out, rows)) => GraftTable.KeyRows(pk, out, rows.take(limit))
+      case Left(df) => GraftTable.KeyRows(pk, df.schema, df.take(limit).toSeq)
+    }
   }
 
   /**
@@ -3487,6 +3534,18 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
 }
 
 object GraftTable {
+  /** A rows-first key lookup's answer ([[GraftTable#lookupPk]]): the key
+    * column's logical name, the logical schema labeling `rows`, the rows. */
+  final case class KeyRows(key: String, schema: StructType, rows: Seq[Row])
+
+  /** Schema of [[GraftTable#snapshotsDF]] and [[GraftTable#snapshotRows]]. */
+  val SnapshotsSchema: StructType = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    StructType(Seq(StructField("snapshot_id", LongType, nullable = false),
+      StructField("parent_id", LongType), StructField("committed_at", StringType),
+      StructField("operation", StringType), StructField("records", LongType)))
+  }
+
   /** One daemon thread for post-commit serving pre-warms: warming runs
     * strictly BEHIND the commit (never in its latency), one at a time —
     * a burst of commits queues warms rather than spawning threads. */

@@ -368,6 +368,47 @@ class ApiHttpSpec extends AnyFunSuite {
     post("/delete/orders_t/777777", "")
   }
 
+  test("GET /edit labels rows with logical names after a column rename") {
+    val cat = session.catalog
+    val rows = spark.range(1, 41).select(col("id"),
+      (col("id") * 10).as("amount"), concat(lit("n"), col("id")).as("name"))
+    val acct = cat.createTable("edit_ren_t", rows.schema)
+    acct.overwriteBucketed(rows, "id", 4)
+    def getHtml(path: String): (Int, String) = {
+      val r = client.send(HttpRequest.newBuilder(URI.create(base + path))
+        .header("Accept", "text/html").GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      (r.statusCode(), r.body())
+    }
+    // a non-key rename: the reply names the column as read() does
+    acct.renameColumn("amount", "amt")
+    val (c1, b1) = get("/edit/edit_ren_t/7")
+    assert(c1 == 200 && b1.startsWith("""{"columns":["id","amt","name"]"""), b1)
+    assert(b1.contains(""""amt":70""") && !b1.contains("amount"), b1)
+    assert(acct.lookupKey(7L).columns.toSeq == acct.read().columns.toSeq)
+    // the same under a pending merge-on-read delta (driver-side resolution)
+    acct.upsertDeferred(spark.range(7, 8).select(col("id"),
+      lit(71L).as("amt"), lit("n7").as("name")), "id")
+    val (c2, b2) = get("/edit/edit_ren_t/7")
+    assert(c2 == 200 && b2.contains(""""amt":71""") && !b2.contains("amount"), b2)
+    // renaming the key itself: the pk is found under its new name
+    acct.renameColumn("id", "key")
+    val (c3, b3) = get("/edit/edit_ren_t/7")
+    assert(c3 == 200 && b3.startsWith("""{"columns":["key","amt","name"]"""), b3)
+    assert(b3.contains(""""key":7,"amt":71"""), b3)
+    val (c4, b4) = getHtml("/edit/edit_ren_t/7")
+    assert(c4 == 200 && b4.contains("""name="key" value="7" readonly"""), b4.take(1200))
+    assert(b4.contains("""name="amt" value="71""""), b4.take(1200))
+    // an unbucketed table with a renamed key takes the filtered read
+    val plain = cat.saveTable("edit_ren_plain_t", rows)
+    plain.renameColumn("id", "key")
+    val (c5, b5) = get("/edit/edit_ren_plain_t/3")
+    assert(c5 == 200 && b5.contains(""""key":3,"amount":30"""), b5)
+    // an absent key still answers its columns
+    val (c6, b6) = get("/edit/edit_ren_t/999")
+    assert(c6 == 200 && b6 == """{"columns":["key","amt","name"],"rows":[]}""", b6)
+  }
+
   test("one-call CDC onboarding: POST /upload?mode=cdc stages envelopes and starts the merger") {
     val csv = "id,name,amount\n1,alpha,1.5\n2,beta,2.5\n3,gamma,3.5\n"
     val (c1, b1) = post("/upload/cdc_onboard_t?mode=cdc&trigger_ms=0", csv)
