@@ -90,10 +90,11 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
     }
   }
 
-  // Shared by the serving lookups: building a fresh Hadoop conf per call
-  // copies the whole session conf (~10 ms) — measurable against a
-  // millisecond-class point read. Hadoop Configuration is thread-safe for
-  // reads, and the serving path never mutates it.
+  // ONE read-only Hadoop conf per table instance, shared by the serving
+  // lookups' footer-plan cache ([[LocalPointRead]] copies it per file plan)
+  // and the post-commit prewarm below, so both build their plans from the
+  // same settings. Hadoop Configuration is thread-safe for reads, and
+  // neither path mutates it.
   private lazy val servingConf = spark.sessionState.newHadoopConf()
 
   /** Fire-and-forget post-commit pre-warm of the serving caches for
@@ -113,7 +114,6 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
     // byte budget) — warming it would only churn the footer LRU. Serving
     //-scale tables stay fully covered.
     if (rels.nonEmpty && rels.size <= GraftTable.PrewarmMaxDirs &&
-        LocalPointRead.enabled &&
         GraftTable.recentlyServed(rootKey)) {
       val abs = rels.map(r => root.resolve(r).toString)
       GraftTable.prewarmPool.execute(() =>
@@ -693,9 +693,13 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
    * its base-only keys fail the filter anyway and its delta'd keys resolve
    * from the delta scan.
    */
-  def readPoint(column0: String, value: Any): DataFrame = {
+  def readPoint(column0: String, value: Any): DataFrame =
+    pointFrame(log.latest(), column0, value)
+
+  /** [[readPoint]] over a head already in hand. */
+  private def pointFrame(headOpt: Option[Snapshot], column0: String,
+      value: Any): DataFrame = {
     require(value != null, "readPoint probes equality; NULL never matches")
-    val headOpt = log.latest()
     if (headOpt.isEmpty) return emptyDF(new StructType())
     val head = headOpt.get
     val st = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
@@ -747,15 +751,14 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
    */
   def readPointRows(column0: String, value: Any): Seq[Row] = {
     markServed()
-    val column = ColumnIds.physicalFor(schema, column0)
-    val fast: Option[Seq[Row]] =
-      try {
-        val headOpt = log.latest()
-        if (headOpt.isEmpty) return Seq.empty
-        val head = headOpt.get
-        if (head.deltaDirs.nonEmpty || !LocalPointRead.enabled) None
-        else {
+    val headOpt = log.latest()
+    val fast: Option[Seq[Row]] = headOpt match {
+      case None => return Seq.empty
+      case Some(head) if head.deltaDirs.nonEmpty => None
+      case Some(head) =>
+        try {
           val st = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+          val column = ColumnIds.physicalFor(st, column0)
           require(st.fieldNames.contains(column),
             s"table $name has no column $column0")
           if (!LocalPointRead.supports(st)) None
@@ -778,21 +781,15 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
                 case None => statDirs
               }
               if (dirs.isEmpty) Some(Seq.empty)
-              else {
-                val abs = dirs.map(d => root.resolve(d).toString)
-                LocalPointRead.totalBytes(servingConf, abs) match {
-                  case Some(total) if total <= LocalPointRead.budgetBytes =>
-                    LocalPointRead.lookupRows(spark, servingConf, abs, st,
-                      column, value)
-                  case _ => None
-                }
-              }
+              // lookupRowsIn enforces the byte cap itself (None over it).
+              else LocalPointRead.lookupRowsIn(spark, servingConf,
+                dirs.map(d => root.resolve(d).toString), st, column, Seq(value))
             }
           }
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    // Fallback takes the ORIGINAL (logical) name — readPoint maps it itself.
-    fast.getOrElse(readPoint(column0, value).collect().toSeq)
+        } catch { case scala.util.control.NonFatal(_) => None }
+    }
+    // Fallback takes the ORIGINAL (logical) name — pointFrame maps it itself.
+    fast.getOrElse(pointFrame(headOpt, column0, value).collect().toSeq)
   }
 
   /** Per-instance memo of the last base-scan DataFrame, keyed by snapshot
@@ -1861,51 +1858,35 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
   }
 
   /**
-   * The ONE key-lookup path choice behind [[lookupKey]], [[lookupKeyRows]]
-   * and [[lookupPk]], made from ONE head snapshot: schema, bucket spec,
-   * dirs and delta chain all come from `head` — re-reading the log per
-   * field cost a log listing each, a measurable slice of a
+   * The ONE key-lookup read behind [[lookupKey]], [[lookupKeyRows]],
+   * [[lookupKeys]] and [[lookupPk]], made from ONE head snapshot: schema,
+   * bucket spec, dirs and delta chain all come from `head` — re-reading
+   * the log per field cost a log listing each, a measurable slice of a
    * millisecond-class serving call, and could observe different snapshots
    * across a concurrent commit.
    *
-   * Right = the driver-side answer: the rows, labeled positionally with
-   * [[servedSchema]]. Left = the lazy distributed fallback (unbucketed
-   * table, nested schema, byte cap exceeded, any local-read failure),
-   * already under logical names.
+   * Right = the driver-side answer ([[servingRows]]): the rows, labeled
+   * positionally with [[servedSchema]]. Left = the lazy fallback frame,
+   * already under logical names: the bucket-pruned resolving scan
+   * ([[prunedFrame]]) on a bucketed table, the resolving read filtered by
+   * the default key ([[defaultPkOf]]) on any other.
    */
-  private def keyLookup(head: Option[Snapshot], value: Any)
+  private def keyRows(head: Option[Snapshot], values: Seq[Any])
       : Either[DataFrame, (StructType, Seq[Row])] = {
     markServed()
-    head match {
-      case None => Left(lookupViaRead(head, value))
-      case Some(h) =>
+    head.flatMap(h => bucketSpecOf(h).map(h -> _)) match {
+      case Some((h, (bk, n))) =>
         val st = DataType.fromJson(h.schemaJson).asInstanceOf[StructType]
-        def served(rows: Seq[Row]): Either[DataFrame, (StructType, Seq[Row])] = {
-          val out = servedSchema(st)
-          Right(out -> (if (!ColumnIds.hasMapping(st)) rows
-            else rows.map(r => new org.apache.spark.sql.catalyst.expressions
-              .GenericRowWithSchema(r.toSeq.toArray, out))))
+        servingRows(h, st, bk, n, values) match {
+          case Some(rows) =>
+            val out = servedSchema(st)
+            Right(out -> (if (!ColumnIds.hasMapping(st)) rows
+              else rows.map(r => new org.apache.spark.sql.catalyst.expressions
+                .GenericRowWithSchema(r.toSeq.toArray, out))))
+          case None => Left(prunedFrame(h, st, bk, n, values))
         }
-        bucketSpecOf(h) match {
-          case Some((bk, n)) if h.deltaDirs.isEmpty =>
-            // Snapshot-cached bucket index: O(dirs-in-bucket) per lookup,
-            // not an O(dirs) filter — the term that dominated warm serving
-            // latency at 100k+ dirs.
-            val dirs = h.dataDirsByBucket
-              .getOrElse(driverBucketId(value, st(bk).dataType, n), Nil)
-              .map(d => root.resolve(d).toString)
-            if (dirs.isEmpty) served(Seq.empty)
-            else LocalPointRead.lookupRows(spark, servingConf, dirs, st, bk, value) match {
-              case Some(rows) => served(rows)
-              case None => Left(ColumnIds.toLogical(spark.read.schema(st)
-                .parquet(dirs: _*).filter(col(bk) === lit(value)), st))
-            }
-          // A pending delta could hold a newer image or tombstone for the
-          // key: resolve it driver-side, or through the resolving read.
-          case _ =>
-            (if (h.deltaDirs.isEmpty) None else morServingRows(h, value))
-              .map(served).getOrElse(Left(lookupViaRead(head, value)))
-        }
+      case None => Left(head.map(readResolved).getOrElse(emptyDF(schemaOf(head)))
+        .filter(col(defaultPkOf(head)).isin(values: _*)))
     }
   }
 
@@ -1919,163 +1900,165 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
   private def servedSchema(st: StructType): StructType =
     StructType(ColumnIds.logicalSchema(st).fields.map(_.copy(nullable = true)))
 
-  /** The slow-path lookup. Bucketed tables route through [[lookupKeys]],
-    * which stays bucket-pruned on both sides of a pending delta chain —
-    * only an UNBUCKETED table pays the full resolving read here. */
-  private def lookupViaRead(head: Option[Snapshot], value: Any): DataFrame =
-    if (head.flatMap(bucketSpecOf).isDefined) lookupKeys(Seq(value))
-    else {
-      val bk = graft.functions.Identifiers.findIdCol(
-        ColumnIds.logicalSchema(schemaOf(head)).fieldNames.toSeq)
-      readWhere(head, bk, value)
-    }
-
-  /** `head`'s resolved rows whose (logical) `column` equals `value`. */
-  private def readWhere(head: Option[Snapshot], column: String, value: Any): DataFrame =
-    head.map(readResolved).getOrElse(emptyDF(schemaOf(head)))
-      .filter(col(column) === lit(value))
-
   /**
-   * Driver-side serving lookup under PENDING merge-on-read deltas — the
+   * Driver-side serving read of `values` on a table bucketed by `bk` —
+   * zero Spark jobs, including under PENDING merge-on-read deltas, the
    * state a CDC-ingesting table is in almost all the time between
-   * compactions, which previously demoted every point lookup to a Spark
-   * job (~90 ms scheduler floor) exactly when serving matters most. Reads
-   * the key's base bucket plus the (leaf-pruned where sound) delta chain
-   * with the same [[LocalPointRead]] machinery, then applies
-   * [[resolveDeltas]]'s algebra to the handful of materialized rows:
-   * highest chain sequence wins, a winning `__op = 'd'` tombstone deletes.
-   * Chain positions come from the FULL chain even for a pruned subset,
-   * mirroring the distributed subset resolution.
+   * compactions. Reads the (leaf-pruned where sound) delta chain
+   * newest-first with the same [[LocalPointRead]] machinery: each key
+   * resolves independently, dropping out of the probe set at its FIRST
+   * (newest) delta hit, where [[resolveDeltas]]' algebra applies to the
+   * handful of materialized rows (highest chain sequence wins, a winning
+   * `__op = 'd'` tombstone deletes). The keys no delta holds — every key
+   * when no delta pends — then read their base buckets in one final call.
+   * The answer set matches `resolveDeltas`' rank cut filtered by
+   * `key IN (values)`.
    *
-   * None = fall back to the distributed resolving lookup: table not
-   * bucketed by the mor key (delta rows can't be bucket-matched), nested
-   * schema, byte cap exceeded (the delta chain up front — bounded by
-   * compactEvery — plus, later, only the still-unresolved keys' base
+   * None = fall back to [[prunedFrame]]: more than 1024 keys (beyond that
+   * the IN predicate and membership set stop being cheap, and the
+   * distributed scan is the right plan anyway), pending deltas on a table
+   * not bucketed by the mor key (delta rows can't be bucket-matched),
+   * nested schema, byte cap exceeded (the delta chain up front — bounded
+   * by compactEvery — plus, later, only the still-unresolved keys' base
    * buckets), or any read failure.
    */
-  private def morServingRows(head: Snapshot, value: Any): Option[Seq[Row]] =
-    morServingRowsIn(head, Seq(value))
-
-  /** Multi-key form of the pending-delta serving read: each key resolves
-    * independently — a key drops out of the probe set at its FIRST
-    * (newest) delta hit; keys no delta holds read their base buckets in
-    * one final call. The answer set matches `resolveDeltas`' rank cut
-    * filtered by `key IN (values)`. */
-  private def morServingRowsIn(head: Snapshot, values: Seq[Any]): Option[Seq[Row]] =
+  private def servingRows(head: Snapshot, st: StructType, bk: String, n: Int,
+      values: Seq[Any]): Option[Seq[Row]] =
     try {
-      if (!LocalPointRead.enabled) return None
-      bucketSpecOf(head) match {
-        case Some((bk, n)) if head.summary.get("mor_key").contains(bk) =>
-          val st = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-          if (!LocalPointRead.supports(st)) return None
-          val dt = st(bk).dataType
-          val tz = spark.sessionState.conf.sessionLocalTimeZone
-          // Canonical EXTERNAL form of every key (cast through the column
-          // type and back): row key values compare against these, so an
-          // Int probe finds a Long column's rows. Binary keys normalize to
-          // ArraySeq for value-equality set membership.
-          val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToScalaConverter(dt)
-          def norm(v: Any): Any = v match {
-            case a: Array[Byte] =>
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
-            case x => x
-          }
-          val extVals = values
-            .map(v => org.apache.spark.sql.catalyst.expressions.Cast(
-              org.apache.spark.sql.catalyst.expressions.Literal(v), dt,
-              Some(tz)).eval(null))
-            .filter(_ != null).map(conv) // `= NULL` matches nothing
-          val extByNorm = extVals.map(v => norm(v) -> v).toMap
-          var remaining = extByNorm.keySet
-          if (remaining.isEmpty) return Some(Seq.empty)
-          val buckets = extByNorm.values.map(driverBucketId(_, dt, n)).toSet
-          // Leaf delta dirs (appends made under pending deltas) prune to
-          // the keys' buckets — sound here because mor_key IS the bucket
-          // key; flat upsertDeferred dirs are always read. Chain ORDER is
-          // what resolution needs (newest-first iteration below); the
-          // per-dir sequence number itself never is.
-          val deltas = head.deltaDirs.collect {
-            case d if bucketOfDir(d).forall(buckets.contains) =>
-              root.resolve(d).toString
-          }
-          // Budget in two installments: the delta chain is decoded
-          // unconditionally, so it must fit up front; the BASE side is
-          // priced later against only the still-unresolved keys' buckets —
-          // a probe where most keys resolve in the newest delta shouldn't
-          // be pushed to the distributed path by base bytes it never reads.
-          val deltaTotal = LocalPointRead.totalBytes(servingConf, deltas)
-            .getOrElse(return None)
-          if (deltaTotal > LocalPointRead.budgetBytes) return None
-          val deltaSt = StructType(st.fields :+
-            org.apache.spark.sql.types.StructField("__op",
-              org.apache.spark.sql.types.StringType, nullable = true))
-          val keyIdx = st.fieldIndex(bk)
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          // NEWEST delta first; a key leaves the probe set at its first
-          // hit — that dir holds its highest-sequence rows (sequences are
-          // unique per dir and a pruned-away leaf cannot hold a probed
-          // key), so the hit IS the rank cut. A full-update CDC chain
-          // resolves every key in ONE delta decode instead of the chain
-          // (measured 379 ms -> the newest batch only, single-key case).
-          for (dir <- deltas.reverseIterator if remaining.nonEmpty) {
-            LocalPointRead.lookupRowsIn(spark, servingConf, Seq(dir),
-                deltaSt, bk, remaining.toSeq.map(extByNorm)) match {
-              case Some(rs) =>
-                rs.groupBy(r => norm(r.get(keyIdx))).foreach { case (k, rows) =>
-                  remaining -= k
-                  rows.foreach { r =>
-                    if (r.get(st.fields.length).asInstanceOf[String] != "d")
-                      out += new org.apache.spark.sql.catalyst.expressions
-                        .GenericRowWithSchema(
-                          r.toSeq.dropRight(1).toArray[Any], st)
-                  }
-                }
-              case None => return None
-            }
-          }
-          // Keys no delta holds: every base row survives (all at sequence
-          // 0 — resolveDeltas' rank cut keeps duplicates). Base dirs are
-          // recomputed from the REMAINING keys' buckets: keys already
-          // resolved in a delta never touch (or price) their base buckets.
-          if (remaining.nonEmpty) {
-            val remVals = remaining.toSeq.map(extByNorm)
-            val remBuckets = remVals.map(driverBucketId(_, dt, n)).toSet
-            val baseDirs = head.dataDirsInBuckets(remBuckets)
-              .map(d => root.resolve(d).toString)
-            val baseTotal = LocalPointRead.totalBytes(servingConf, baseDirs)
-              .getOrElse(return None)
-            if (deltaTotal + baseTotal > LocalPointRead.budgetBytes) return None
-            LocalPointRead.lookupRowsIn(spark, servingConf, baseDirs, st,
-                bk, remVals) match {
-              case Some(rs) => out ++= rs
-              case None => return None
-            }
-          }
-          Some(out.toSeq)
-        case _ => None
+      if (values.size > 1024 || !LocalPointRead.supports(st) ||
+          (head.deltaDirs.nonEmpty && !head.summary.get("mor_key").contains(bk)))
+        return None
+      val dt = st(bk).dataType
+      val tz = spark.sessionState.conf.sessionLocalTimeZone
+      // Canonical EXTERNAL form of every key (cast through the column
+      // type and back): row key values compare against these, so an
+      // Int probe finds a Long column's rows. Binary keys normalize to
+      // ArraySeq for value-equality set membership.
+      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(dt)
+      def norm(v: Any): Any = v match {
+        case a: Array[Byte] =>
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+        case x => x
       }
+      val extVals = values
+        .map(v => org.apache.spark.sql.catalyst.expressions.Cast(
+          org.apache.spark.sql.catalyst.expressions.Literal(v), dt,
+          Some(tz)).eval(null))
+        .filter(_ != null).map(conv) // `= NULL` matches nothing
+      val extByNorm = extVals.map(v => norm(v) -> v).toMap
+      var remaining = extByNorm.keySet
+      if (remaining.isEmpty) return Some(Seq.empty)
+      val buckets = extByNorm.values.map(driverBucketId(_, dt, n)).toSet
+      // Leaf delta dirs (appends made under pending deltas) prune to
+      // the keys' buckets — sound here because mor_key IS the bucket
+      // key; flat upsertDeferred dirs are always read. Chain ORDER is
+      // what resolution needs (newest-first iteration below); the
+      // per-dir sequence number itself never is.
+      val deltas = head.deltaDirs.collect {
+        case d if bucketOfDir(d).forall(buckets.contains) =>
+          root.resolve(d).toString
+      }
+      // Budget in two installments: the delta chain is decoded
+      // unconditionally, so it must fit up front; the BASE side is
+      // priced later against only the still-unresolved keys' buckets —
+      // a probe where most keys resolve in the newest delta shouldn't
+      // be pushed to the distributed path by base bytes it never reads.
+      val deltaTotal = LocalPointRead.totalBytes(servingConf, deltas)
+        .getOrElse(return None)
+      if (deltaTotal > LocalPointRead.budgetBytes) return None
+      val deltaSt = StructType(st.fields :+
+        org.apache.spark.sql.types.StructField("__op",
+          org.apache.spark.sql.types.StringType, nullable = true))
+      val keyIdx = st.fieldIndex(bk)
+      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+      // NEWEST delta first; a key leaves the probe set at its first
+      // hit — that dir holds its highest-sequence rows (sequences are
+      // unique per dir and a pruned-away leaf cannot hold a probed
+      // key), so the hit IS the rank cut. A full-update CDC chain
+      // resolves every key in ONE delta decode instead of the chain
+      // (measured 379 ms -> the newest batch only, single-key case).
+      for (dir <- deltas.reverseIterator if remaining.nonEmpty) {
+        LocalPointRead.lookupRowsIn(spark, servingConf, Seq(dir),
+            deltaSt, bk, remaining.toSeq.map(extByNorm)) match {
+          case Some(rs) =>
+            rs.groupBy(r => norm(r.get(keyIdx))).foreach { case (k, rows) =>
+              remaining -= k
+              rows.foreach { r =>
+                if (r.get(st.fields.length).asInstanceOf[String] != "d")
+                  out += new org.apache.spark.sql.catalyst.expressions
+                    .GenericRowWithSchema(
+                      r.toSeq.dropRight(1).toArray[Any], st)
+              }
+            }
+          case None => return None
+        }
+      }
+      // Keys no delta holds: every base row survives (all at sequence
+      // 0 — resolveDeltas' rank cut keeps duplicates). Base dirs are
+      // recomputed from the REMAINING keys' buckets: keys already
+      // resolved in a delta never touch (or price) their base buckets.
+      // The snapshot-cached bucket index makes that O(dirs-in-bucket),
+      // not an O(dirs) filter.
+      if (remaining.nonEmpty) {
+        val remVals = remaining.toSeq.map(extByNorm)
+        val remBuckets = remVals.map(driverBucketId(_, dt, n)).toSet
+        val baseDirs = head.dataDirsInBuckets(remBuckets)
+          .map(d => root.resolve(d).toString)
+        val baseTotal = LocalPointRead.totalBytes(servingConf, baseDirs)
+          .getOrElse(return None)
+        if (deltaTotal + baseTotal > LocalPointRead.budgetBytes) return None
+        LocalPointRead.lookupRowsIn(spark, servingConf, baseDirs, st,
+            bk, remVals) match {
+          case Some(rs) => out ++= rs
+          case None => return None
+        }
+      }
+      Some(out.toSeq)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /**
-   * Key-equality lookup with bucket pruning: on a bucketed table the key's
-   * bucket is computed driver-side and ONLY that bucket's leaf dirs are
-   * scanned — at 1000 executors × 100 TB this turns a point lookup into a
-   * 1/numBuckets scan (plus parquet footer min/max skipping within it).
-   *
-   * Serving fast path: when the pruned bucket is small (≤ 64 MB by
-   * default), the driver reads it directly with Spark's own vectorized
-   * parquet reader — zero Spark jobs, no per-key codegen, millisecond
-   * class ([[LocalPointRead]]). Larger buckets, nested schemas, or any
-   * local-read failure fall back to a distributed pruned scan, which
-   * remains the plan of record at scale.
+   * [[keyRows]]' lazy fallback on a bucketed table: the union of the keys'
+   * buckets read in ONE multi-dir scan, filtered by `isin` — at 1000
+   * executors × 100 TB a point lookup becomes a 1/numBuckets scan (plus
+   * parquet footer min/max skipping within it). Pending deltas resolve on
+   * top of the pruned base with the bounded delta chain — falling back to
+   * a full resolved scan would make every serving lookup O(table) the
+   * moment one delta batch pends. Delta LEAF dirs (appends made under
+   * pending deltas) may only be pruned when the resolution key IS the
+   * bucket key: resolution dedups per mor_key, and if mor_key differs, a
+   * leaf in another bucket can hold the winning image for a looked-up key
+   * — pruning it would resurrect the stale base row. Flat upsertDeferred
+   * dirs (no bucket segment) are always kept.
    */
-  def lookupKey(value: Any): DataFrame = keyLookup(log.latest(), value) match {
-    case Right((st, rows)) =>
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, st)
-    case Left(df) => df
+  private def prunedFrame(head: Snapshot, st: StructType, bk: String, n: Int,
+      values: Seq[Any]): DataFrame = {
+    val buckets = values.map(v => driverBucketId(v, st(bk).dataType, n)).toSet
+    val dirs = head.dataDirsInBuckets(buckets)
+    val deltaSub =
+      if (head.summary.get("mor_key").contains(bk))
+        head.deltaDirs.filter(d => bucketOfDir(d).forall(buckets.contains))
+      else head.deltaDirs
+    val base =
+      if (dirs.isEmpty) emptyDF(StructType(st.fields.map(_.copy(nullable = true))))
+      else spark.read.schema(st)
+        .parquet(dirs.map(d => root.resolve(d).toString): _*)
+    ColumnIds.toLogical(
+      (if (deltaSub.isEmpty) base else resolveDeltas(head, base, deltaSub))
+        .filter(col(bk).isin(values: _*)), st)
   }
+
+  /**
+   * Key-equality lookup with bucket pruning ([[lookupKeys]] of one key).
+   *
+   * Serving fast path: when the pruned bucket (plus any pending delta
+   * chain) is small (≤ 64 MB by default), the driver reads it directly
+   * with Spark's own vectorized parquet reader — zero Spark jobs, no
+   * per-key codegen, millisecond class ([[LocalPointRead]]). Larger
+   * buckets, nested schemas, or any local-read failure fall back to a
+   * distributed pruned scan, which remains the plan of record at scale.
+   */
+  def lookupKey(value: Any): DataFrame = lookupKeys(Seq(value))
 
   /**
    * Serving point lookup returning MATERIALIZED rows — the transport shape
@@ -2084,7 +2067,7 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
    * construction + first-collect query-execution overhead (~20 ms) that
    * [[lookupKey]].collect() pays on top of the same driver-side read.
    */
-  def lookupKeyRows(value: Any): Seq[Row] = keyLookup(log.latest(), value) match {
+  def lookupKeyRows(value: Any): Seq[Row] = keyRows(log.latest(), Seq(value)) match {
     case Right((_, rows)) => rows
     case Left(df) => df.collect().toSeq
   }
@@ -2093,93 +2076,37 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
    * Rows-first lookup by the table's default key ([[defaultPk]]) — the
    * record read behind an edit page (`api_poc.py:648-702`). ONE head read
    * yields the key's logical name, the logical schema labeling the rows
-   * (an empty answer still carries its columns) and at most `limit` rows. `raw` is the key as text, coerced to the key
-   * column's type. A table bucketed by that key answers on
-   * [[lookupKey]]'s path (driver-side rows, no Spark job when the serving
-   * preconditions hold); any other table runs a filtered resolving read.
+   * (an empty answer still carries its columns) and at most `limit` rows.
+   * `raw` is the key as text, coerced to the key column's type. A bucketed
+   * table (whose default key is its bucket key) answers on [[lookupKey]]'s
+   * path (driver-side rows, no Spark job when the serving preconditions
+   * hold); any other table runs a filtered resolving read.
    */
   def lookupPk(raw: String, limit: Int): GraftTable.KeyRows = {
     val head = log.latest()
-    val st = schemaOf(head)
     val pk = defaultPkOf(head)
     val value = graft.functions.Coerce.coerce(raw,
-      ColumnIds.logicalSchema(st)(pk).dataType)
-    val answer =
-      if (head.flatMap(bucketSpecOf).exists(_._1 == ColumnIds.physicalFor(st, pk)))
-        keyLookup(head, value)
-      else Left(readWhere(head, pk, value))
-    answer match {
+      ColumnIds.logicalSchema(schemaOf(head))(pk).dataType)
+    keyRows(head, Seq(value)) match {
       case Right((out, rows)) => GraftTable.KeyRows(pk, out, rows.take(limit))
       case Left(df) => GraftTable.KeyRows(pk, df.schema, df.take(limit).toSeq)
     }
   }
 
   /**
-   * Multi-key pruned lookup: the union of the keys' buckets is read in ONE
-   * multi-dir scan, filtered by `isin`. For a small key set (an IVF probe's
-   * cells, a semi-join against a driver-known id list) this scans
-   * |distinct buckets|/numBuckets of the table instead of all of it.
+   * Multi-key pruned lookup: only the keys' buckets are read. For a small
+   * key set (an IVF probe's cells, a search tier's postings, a semi-join
+   * against a driver-known id list) this reads |distinct buckets|/
+   * numBuckets of the table instead of all of it — driver-side while the
+   * serving preconditions hold ([[servingRows]]), else as one distributed
+   * pruned scan. An unbucketed table runs the resolving read filtered by
+   * its default key.
    */
-  def lookupKeys(values: Seq[Any]): DataFrame = {
-    markServed()
-    // ONE log read: bucket spec, schema, dirs and delta chain all come from
-    // the same head snapshot — separate reads could observe different
-    // snapshots across a concurrent commit (and each costs log I/O).
-    val headOpt = log.latest()
-    headOpt.flatMap(h => bucketSpecOf(h).map(h -> _)) match {
-      case Some((head, (bk, n))) =>
-        val st = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-        if (values.isEmpty) return emptyDF(st)
-        val buckets = values.map(v => driverBucketId(v, st(bk).dataType, n)).toSet
-        val dirs = head.dataDirsInBuckets(buckets)
-        // Serving fast path, multi-key form: with the keys' buckets (plus,
-        // under pending deltas, the chain) inside the byte cap, the driver
-        // reads them itself — the search tier's postings fetch (a handful
-        // of token buckets) and an IVF probe's cell fetch drop from a
-        // Spark job to a local read, and a CDC-ingesting table keeps the
-        // same path between compactions. A bounded key count keeps the IN
-        // predicate + membership set sane; beyond it the distributed scan
-        // is the right plan anyway.
-        if (values.size <= 1024) {
-          val served =
-            if (head.deltaDirs.isEmpty)
-              LocalPointRead.lookupRowsIn(spark, servingConf,
-                dirs.map(d => root.resolve(d).toString), st, bk, values)
-            else morServingRowsIn(head, values)
-          served match {
-            case Some(rows) =>
-              import scala.jdk.CollectionConverters._
-              return ColumnIds.toLogical(spark.createDataFrame(rows.asJava,
-                StructType(st.fields.map(_.copy(nullable = true)))), st)
-            case None => () // fall through to the distributed scan
-          }
-        }
-        // Pending deltas: the lookup stays bucket-pruned on the BASE side
-        // (the big one) and reads the bounded delta chain on top — falling
-        // back to a full resolved scan would make every serving lookup
-        // O(table) the moment one delta batch pends. Delta LEAF dirs
-        // (appends made under pending deltas) may only be pruned when the
-        // resolution key IS the bucket key: resolution dedups per mor_key,
-        // and if mor_key differs, a leaf in another bucket can hold the
-        // winning image for a looked-up key — pruning it would resurrect
-        // the stale base row. Flat upsertDeferred dirs (no bucket segment)
-        // are always kept.
-        val deltaSub =
-          if (head.summary.get("mor_key").contains(bk))
-            head.deltaDirs.filter(d => bucketOfDir(d).forall(buckets.contains))
-          else head.deltaDirs
-        val base =
-          if (dirs.isEmpty) emptyDF(st)
-          else spark.read.schema(st)
-            .parquet(dirs.map(d => root.resolve(d).toString): _*)
-        ColumnIds.toLogical(
-          (if (deltaSub.isEmpty) base else resolveDeltas(head, base, deltaSub))
-            .filter(col(bk).isin(values: _*)), st)
-      case None => // unbucketed (or empty) table: resolving scan + id filter
-        val bk = graft.functions.Identifiers.findIdCol(
-          logicalSchema.fieldNames.toSeq)
-        read().filter(col(bk).isin(values: _*))
-    }
+  def lookupKeys(values: Seq[Any]): DataFrame = keyRows(log.latest(), values) match {
+    case Right((st, rows)) =>
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.asJava, st)
+    case Left(df) => df
   }
 
   /**

@@ -47,18 +47,9 @@ import org.apache.spark.sql.types._
  */
 object LocalPointRead {
 
-  /** Set to "false" to force every lookup through the distributed scan. */
-  val EnabledProp = "graft.lookup.local"
-
-  /** Candidate-file byte cap for the driver-side path (default 64 MB). */
+  /** Candidate-file byte cap for the driver-side path (default 64 MB);
+    * "0" forces every lookup through the distributed scan. */
   val MaxBytesProp = "graft.lookup.local.maxBytes"
-
-  /** Set to "false" to skip the parquet stats/column-index predicate —
-    * diagnostic toggle for attributing lookup cost (prune vs decode). */
-  val StatsFilterProp = "graft.lookup.local.statsFilter"
-
-  private def statsFilter: Boolean =
-    !sys.props.get(StatsFilterProp).contains("false")
 
   private def maxBytes: Long =
     sys.props.get(MaxBytesProp).flatMap(_.toLongOption).getOrElse(64L << 20)
@@ -75,8 +66,6 @@ object LocalPointRead {
       dirs: Seq[String]): Option[Long] =
     try Some(dirs.flatMap(listDir(_, conf)).map(_.getLen).sum)
     catch { case scala.util.control.NonFatal(_) => None }
-
-  def enabled: Boolean = !sys.props.get(EnabledProp).contains("false")
 
   /** Populate the dir-listing and file-plan caches for freshly committed
     * dirs — the post-commit pre-warm (r18). Under continuous ingest, the
@@ -150,7 +139,7 @@ object LocalPointRead {
   private lazy val footerOptions =
     org.apache.parquet.ParquetReadOptions.builder().build()
 
-  /** Rows decoded by the most recent [[lookupRows]] on this thread — the
+  /** Rows decoded by the most recent [[lookupRowsIn]] on this thread — the
     * observable for specs asserting that footer-stats row-group pruning
     * actually bounded the decode (latency is too noisy to assert on). */
   val lastRowsDecoded = new ThreadLocal[Long] {
@@ -228,12 +217,6 @@ object LocalPointRead {
       f: org.apache.hadoop.fs.FileStatus,
       base: org.apache.hadoop.conf.Configuration): FilePlan =
     fileCache.getOrUpdate(f.getPath.toString) {
-      val dbg = sys.props.get("graft.lookup.debug").contains("true")
-      var t0 = System.nanoTime()
-      def mark(label: String): Unit = if (dbg) {
-        val t1 = System.nanoTime()
-        println(f"LKPDBG   plan.$label ${(t1 - t0) / 1e6}%.2f ms"); t0 = t1
-      }
       // Local files bypass the Hadoop stream stack: LocalFileSystem wraps
       // every open in checksum (.crc) verification and path translation —
       // measured 10-17 ms PER FOOTER OPEN on this box, the single largest
@@ -251,14 +234,11 @@ object LocalPointRead {
       // measured 10-12 ms of pure CPU per footer open, the single largest
       // cold-lookup cost. The options are stateless; build once.
       val pr = new org.apache.parquet.hadoop.ParquetFileReader(in, footerOptions)
-      mark("open")
       val (footer, json) =
         try (pr.getFooter, pr.getFooter.getFileMetaData.getKeyValueMetaData
           .get("org.apache.spark.sql.parquet.row.metadata"))
         finally pr.close()
-      mark("footer")
       val fileSt = DataType.fromJson(json).asInstanceOf[StructType]
-      mark("schema")
       // The split-based reader initialize reads its schema + converter
       // flags from the conf — prepared once per file (the conf is mutated
       // here only, then shared read-only across lookups).
@@ -284,7 +264,6 @@ object LocalPointRead {
       conf.set("parquet.filter.dictionary.enabled", "false")
       conf.set("parquet.filter.bloom.enabled", "false")
       conf.set("parquet.filter.record-level.enabled", "false")
-      mark("conf")
       FilePlan(in, footer, conf, f.getLen, fileSt,
         fileSt.fields.map { fld =>
           val c = org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -295,23 +274,13 @@ object LocalPointRead {
 
   /**
    * Read `dirs`' parquet files driver-side, returning the external rows
-   * whose `keyCol` equals `value` in `st`'s column order. None = the
-   * caller must fall back to the distributed scan (nested schema, byte cap
-   * exceeded, feature disabled, or any read error — this path is an
-   * optimization, never the only way to an answer).
+   * whose `keyCol` equals ANY of `values`, in `st`'s column order — one
+   * decode pass over the candidate files with an IN predicate (eq for one
+   * value), the driver-side analog of `filter(col.isin(values))`. None =
+   * the caller must fall back to the distributed scan (nested schema, byte
+   * cap exceeded, or any read error — this path is an optimization, never
+   * the only way to an answer).
    */
-  def lookupRows(
-      spark: SparkSession,
-      conf: org.apache.hadoop.conf.Configuration,
-      dirs: Seq[String],
-      st: StructType,
-      keyCol: String,
-      value: Any): Option[Seq[Row]] =
-    lookupRowsIn(spark, conf, dirs, st, keyCol, Seq(value))
-
-  /** Multi-value form of [[lookupRows]]: rows whose `keyCol` equals ANY of
-    * `values` — one decode pass over the candidate files with an IN
-    * predicate, the driver-side analog of `filter(col.isin(values))`. */
   def lookupRowsIn(
       spark: SparkSession,
       conf: org.apache.hadoop.conf.Configuration,
@@ -319,16 +288,9 @@ object LocalPointRead {
       st: StructType,
       keyCol: String,
       values: Seq[Any]): Option[Seq[Row]] = {
-    if (!enabled || !supports(st)) return None
+    if (!supports(st)) return None
     try {
-      val dbg = sys.props.get("graft.lookup.debug").contains("true")
-      var t0 = System.nanoTime()
-      def mark(label: String): Unit = if (dbg) {
-        val t1 = System.nanoTime()
-        println(f"LKPDBG $label ${(t1 - t0) / 1e6}%.2f ms"); t0 = t1
-      }
       val files = dirs.flatMap(listDir(_, conf))
-      mark("listDir")
       if (files.map(_.getLen).sum > maxBytes) return None
       val dt = st(keyCol).dataType
       val tz = spark.sessionState.conf.sessionLocalTimeZone
@@ -382,14 +344,13 @@ object LocalPointRead {
           v => s.contains(v)
       }
       // One predicate serves every candidate file (same key column+values).
-      val pred = if (statsFilter) valuesPredicate(keyCol, dt, catKeys) else None
+      val pred = valuesPredicate(keyCol, dt, catKeys)
       // (matching rows, rows decoded) of ONE file — self-contained so the
       // multi-file case can fan out across threads.
       def readFile(f: org.apache.hadoop.fs.FileStatus): (Seq[Row], Long) = {
         var rowsDecoded = 0L
         val out = scala.collection.mutable.ArrayBuffer.empty[Row]
         val plan = filePlan(f, conf)
-        mark("filePlan")
         val keyIdx = plan.fileSt.fieldIndex(keyCol)
         val matches = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
         // Rebase modes CORRECTED: every data file was written by this
@@ -408,7 +369,6 @@ object LocalPointRead {
             c
           case None => plan.conf
         }
-        mark("readConf")
         val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
           readConf, new org.apache.hadoop.mapreduce.TaskAttemptID())
         // All three options must be defined for the reader to ADOPT the
@@ -427,7 +387,6 @@ object LocalPointRead {
             Some(plan.inputFile)
               .asInstanceOf[Option[org.apache.parquet.hadoop.util.HadoopInputFile]],
             Some(stream), Some(plan.footer))
-          mark("init")
           while (rdr.nextKeyValue()) {
             rowsDecoded += 1
             val r = rdr.getCurrentValue.asInstanceOf[InternalRow]
@@ -437,7 +396,6 @@ object LocalPointRead {
           try rdr.close()
           finally { try stream.close() catch { case _: Exception => () } }
         }
-        mark("decode")
         val remap = st.fieldNames.map(n =>
           if (plan.fileSt.fieldNames.contains(n)) plan.fileSt.fieldIndex(n) else -1)
         matches.foreach { m =>
@@ -465,7 +423,7 @@ object LocalPointRead {
       // serialize each other; blocking{} lets the pool grow past the
       // blocked threads (same guard the leafCounts footer reads use).
       val perFile: Seq[(Seq[Row], Long)] =
-        if (files.size <= 2 || dbg) files.map(readFile)
+        if (files.size <= 2) files.map(readFile)
         else {
           import scala.concurrent.{Await, Future, blocking}
           import scala.concurrent.ExecutionContext.Implicits.global

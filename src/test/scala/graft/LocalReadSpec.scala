@@ -15,9 +15,9 @@ class LocalReadSpec extends AnyFunSuite {
   private def orders = spark.read.parquet(s"${TestSpark.sf0001}/orders.parquet")
 
   private def distributed(t: GraftTable, key: Long) = {
-    sys.props(LocalPointRead.EnabledProp) = "false"
+    sys.props(LocalPointRead.MaxBytesProp) = "0"
     try t.lookupKey(key).collect().map(_.toSeq).toSet
-    finally sys.props.remove(LocalPointRead.EnabledProp)
+    finally sys.props.remove(LocalPointRead.MaxBytesProp)
   }
 
   test("local lookup equals the distributed scan on orders (incl. date col)") {
@@ -85,9 +85,9 @@ class LocalReadSpec extends AnyFunSuite {
     for (k <- 0L until 40L) {
       val local = t.lookupKeyRows(k).map(_.toSeq)
       val dist = {
-        sys.props(LocalPointRead.EnabledProp) = "false"
+        sys.props(LocalPointRead.MaxBytesProp) = "0"
         try t.lookupKeyRows(k).map(_.toSeq)
-        finally sys.props.remove(LocalPointRead.EnabledProp)
+        finally sys.props.remove(LocalPointRead.MaxBytesProp)
       }
       // Multiset bit-equality: same rows, same values, same null padding.
       assert(local.map(_.toString).sorted == dist.map(_.toString).sorted,
@@ -137,9 +137,9 @@ class LocalReadSpec extends AnyFunSuite {
       "no-delta multi-key lookup must serve from the driver-side read")
     val localRows = viaLocal.collect().map(_.toSeq.toString).sorted.toSeq
     val distRows = {
-      sys.props(LocalPointRead.EnabledProp) = "false"
+      sys.props(LocalPointRead.MaxBytesProp) = "0"
       try t.lookupKeys(keys).collect().map(_.toSeq.toString).sorted.toSeq
-      finally sys.props.remove(LocalPointRead.EnabledProp)
+      finally sys.props.remove(LocalPointRead.MaxBytesProp)
     }
     assert(localRows == distRows && localRows.size == present.size)
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.propBoolean
 
-import graft.table.GraftTable
+import graft.table.{GraftTable, LocalPointRead}
 
 /**
  * Property-based lookup algebra: for ANY random sequence of deferred
@@ -14,7 +14,9 @@ import graft.table.GraftTable
  * optimization, never a semantics change. Covers both key regimes:
  * bucketed BY the merge key, and bucketed by a different column whose
  * value the chain may rewrite (the case where delta-leaf pruning would be
- * unsound and must stay off).
+ * unsound and must stay off). Every lookup is also read through the
+ * forced fallback (a zero byte cap), so the driver-side read and the lazy
+ * fallback frame answer to the same oracle on every case.
  */
 object LookupProps extends Properties("Lookup") {
   private lazy val spark = TestSpark.spark
@@ -55,46 +57,64 @@ object LookupProps extends Properties("Lookup") {
   // Multiset comparison (sorted Seq, not Set): a pruning bug that drops one
   // of two identical rows must fail the property, not hide in set collapse.
   private def canon(d: org.apache.spark.sql.DataFrame): Seq[(Long, String, String)] =
-    d.select("id", "region", "payload").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted
+    rowsOf(d.select("id", "region", "payload").collect().toSeq)
+
+  private def rowsOf(rs: Seq[org.apache.spark.sql.Row]): Seq[(Long, String, String)] =
+    rs.map(r => (r.getAs[Long]("id"), r.getAs[String]("region"),
+      r.getAs[String]("payload"))).sorted
+
+  /** `body` with the driver-side read declined: every lookup answers
+    * from the lazy fallback frame. */
+  private def fallback[T](body: => T): T = {
+    sys.props(LocalPointRead.MaxBytesProp) = "0"
+    try body finally sys.props.remove(LocalPointRead.MaxBytesProp)
+  }
 
   property("bucketed by the merge key: pruned lookup == resolving filter") =
     Prop.forAll(chainGen, Gen.listOfN(3, Gen.chooseNum(0L, 9L))) { (ops, keys) =>
       val t = buildTable("id", ops)
-      canon(t.lookupKeys(keys)) ==
-        canon(t.read().filter(col("id").isin(keys: _*)))
+      val want = canon(t.read().filter(col("id").isin(keys: _*)))
+      (canon(t.lookupKeys(keys)) == want) &&
+        (fallback(canon(t.lookupKeys(keys))) == want)
     }
 
   property("bucketed by a rewritten column: pruned lookup == resolving filter") =
     Prop.forAll(chainGen, Gen.listOfN(2, Gen.oneOf("A", "B", "C"))) { (ops, regs) =>
       val t = buildTable("region", ops)
-      canon(t.lookupKeys(regs)) ==
-        canon(t.read().filter(col("region").isin(regs: _*)))
+      val want = canon(t.read().filter(col("region").isin(regs: _*)))
+      (canon(t.lookupKeys(regs)) == want) &&
+        (fallback(canon(t.lookupKeys(regs))) == want)
     }
 
-  /** The serving rows call routes through the driver-side MOR resolution
-    * (base bucket + pruned delta chain, latest-seq-wins, tombstones) when
-    * the table is bucketed by the merge key and deltas pend — for ANY
-    * random chain it must return exactly the resolving filter's rows, in
-    * both bucket regimes (the rewritten-column regime exercises the
-    * fallback). */
+  /** Every single-key serving call routes through the driver-side MOR
+    * resolution (base bucket + pruned delta chain, latest-seq-wins,
+    * tombstones) when the table is bucketed by the merge key and deltas
+    * pend — for ANY random chain each must return exactly the resolving
+    * filter's rows, in both bucket regimes (the rewritten-column regime
+    * exercises the fallback), and so must the forced fallback. */
   property("serving lookupKeyRows == resolving filter under any delta chain") =
     Prop.forAll(chainGen, Gen.listOfN(3, Gen.chooseNum(0L, 9L))) { (ops, keys) =>
       val byKey = buildTable("id", ops)
       val byRegion = buildTable("region", ops)
-      val rowsOf = (rs: Seq[org.apache.spark.sql.Row]) =>
-        rs.map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted
+      def agree(t: GraftTable, k: Any, want: Seq[(Long, String, String)],
+          label: String): Prop = {
+        val got = Seq(
+          "lookupKeyRows" -> rowsOf(t.lookupKeyRows(k)),
+          "lookupKey" -> rowsOf(t.lookupKey(k).collect().toSeq),
+          "lookupPk" -> rowsOf(t.lookupPk(k.toString, 100).rows),
+          "fallback" -> fallback(rowsOf(t.lookupKeyRows(k))))
+        Prop.all(got.map { case (call, rows) =>
+          (rows == want) :| s"$label $call got=$rows want=$want ops=$ops"
+        }: _*)
+      }
       val perKey = keys.distinct.map { k =>
-        val want = canon(byKey.read().filter(col("id") === k))
-        val got = rowsOf(byKey.lookupKeyRows(k))
-        (got == want) :| s"byKey k=$k got=$got want=$want ops=$ops"
+        agree(byKey, k, canon(byKey.read().filter(col("id") === k)), s"byKey k=$k")
       }
       // byRegion regime: mor_key (id) differs from the bucket key, so the
       // driver MOR path must decline and the fallback still resolve right.
       val perRegion = Seq("A", "B", "C").map { r =>
-        val want = canon(byRegion.read().filter(col("region") === r))
-        val got = rowsOf(byRegion.lookupKeyRows(r))
-        (got == want) :| s"byRegion r=$r got=$got want=$want ops=$ops"
+        agree(byRegion, r, canon(byRegion.read().filter(col("region") === r)),
+          s"byRegion r=$r")
       }
       Prop.all(perKey ++ perRegion: _*)
     }

@@ -175,7 +175,7 @@ class MorSpec extends AnyFunSuite {
     // go O(table) the moment one delta batch pends).
     assert(t.lookupKey(7L).inputFiles.isEmpty,
       "pending-delta lookup must serve from the driver-side MOR path")
-    sys.props(graft.table.LocalPointRead.EnabledProp) = "false"
+    sys.props(graft.table.LocalPointRead.MaxBytesProp) = "0"
     try {
       val plan = t.lookupKey(7L)
       assert(plan.collect().map(_.getAs[String]("o_orderpriority")).toSeq ==
@@ -191,7 +191,7 @@ class MorSpec extends AnyFunSuite {
         s"base side must scan only $bucket: " +
           plan.inputFiles.map(_.split("/data/").last).toSeq)
       assert(deltaFiles.nonEmpty, "the pending delta must be read")
-    } finally sys.props.remove(graft.table.LocalPointRead.EnabledProp)
+    } finally sys.props.remove(graft.table.LocalPointRead.MaxBytesProp)
     // rows-shaped serving call agrees
     val rows = t.lookupKeyRows(7L)
     assert(rows.length == 1 &&

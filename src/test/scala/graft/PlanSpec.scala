@@ -58,10 +58,10 @@ class PlanSpec extends AnyFunSuite {
     assert(localRows.length == 1)
     // Distributed fallback (big buckets at scale): the scan plan itself
     // must be pruned to the key's single bucket dir.
-    sys.props(graft.table.LocalPointRead.EnabledProp) = "false"
+    sys.props(graft.table.LocalPointRead.MaxBytesProp) = "0"
     val lk =
       try t.lookupKey(777L)
-      finally sys.props.remove(graft.table.LocalPointRead.EnabledProp)
+      finally sys.props.remove(graft.table.LocalPointRead.MaxBytesProp)
     val buckets = lk.inputFiles.flatMap(f =>
       "__bucket=(\\d+)".r.findFirstMatchIn(f).map(_.group(1))).toSet
     assert(buckets.size == 1, s"lookup must prune to one bucket, scanned: $buckets")

@@ -81,6 +81,27 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       orders.filter(col("o_orderkey").between(1, 100)).count())
   }
 
+  test("lookupKeys of no keys answers logical names after a rename, with and without deltas") {
+    val cat = freshCat()
+    val t = cat.saveTable("t", orders.limit(0))
+    t.overwriteBucketed(orders.filter(col("o_orderkey") <= 300), "o_orderkey", 4)
+    t.renameColumn("o_totalprice", "price")
+    val want = t.logicalSchema.fieldNames.toSeq
+    assert(want.contains("price") && !want.contains("o_totalprice"))
+    def check(): Unit = {
+      val none = t.lookupKeys(Seq.empty)
+      assert(none.columns.toSeq == want, s"empty key set: ${none.columns.toSeq}")
+      assert(none.collect().isEmpty)
+      assert(t.lookupKeys(Seq(1L)).columns.toSeq == want)
+      assert(t.lookupKey(1L).columns.toSeq == want)
+    }
+    check()
+    t.upsertDeferred(orders.filter(col("o_orderkey") <= 40)
+      .withColumnRenamed("o_totalprice", "price"), "o_orderkey")
+    assert(t.log.latest().get.deltaDirs.nonEmpty)
+    check()
+  }
+
   test("drop is metadata-only; time travel still sees the column") {
     val cat = freshCat()
     val t = cat.saveTable("t", orders.filter(col("o_orderkey") <= 300))

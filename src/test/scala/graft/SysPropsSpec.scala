@@ -12,8 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SysPropsSpec extends AnyFunSuite {
   private val expected = Set(
     "cdc.trace", "cdc.timing", "mor.diag", "morprobe.pollute",
-    "lookup.debug", "lookup.local", "lookup.local.maxBytes",
-    "lookup.local.statsFilter", "v2.morDeltaMaxBytes",
+    "lookup.local.maxBytes", "v2.morDeltaMaxBytes",
     "bucket.rowGroupBytes").map("graft." + _)
 
   test("the main tree reads exactly the listed graft.* system properties") {
