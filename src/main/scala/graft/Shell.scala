@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.api.GraftSession
-import graft.catalog.GraftCatalog
 
 /**
  * Interactive terminal shell over a Graft warehouse — the native twin of
@@ -381,27 +380,7 @@ object Shell {
   def main(args: Array[String]): Unit = {
     val warehouse = args.headOption
       .orElse(sys.env.get("GRAFT_WAREHOUSE")).getOrElse("warehouse")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The process's ONE warehouse doubles as a native Spark catalog: the
-    // sql verb (and any spark.sql) can address `lake.<table>` — v2 scans
-    // with storage-partitioned joins, VERSION/TIMESTAMP AS OF, INSERT
-    // INTO, and metadata-aggregate pushdown, alongside the classic views.
-    spark.conf.set("spark.sql.catalog.lake",
-      classOf[graft.connector.GraftSparkCatalog].getName)
-    spark.conf.set("spark.sql.catalog.lake.warehouse",
-      java.nio.file.Paths.get(warehouse).toAbsolutePath.toString)
-    val session = new GraftSession(
-      new GraftCatalog(spark, java.nio.file.Paths.get(warehouse)))
-    session.refreshViews()
+    val session = GraftSession.open(SparkEntry.localSession(4), warehouse)
     println(s"Graft data shell — warehouse: $warehouse. Type help to list commands.")
     var going = true
     while (going) {
@@ -414,6 +393,6 @@ object Shell {
         case Some(out) => if (out.nonEmpty) println(out)
       }
     }
-    spark.stop()
+    session.catalog.spark.stop()
   }
 }

@@ -14,6 +14,27 @@ import graft.queries._
   */
 object SparkEntry {
 
+  /** Local cores: `$SPARK_GRAFT_CPUS`, else the caller's default. */
+  def cpus(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
+
+  /** The one session every main runs on: `local[cpus]` with as many
+    * shuffle partitions, UTC, v2 bucketing (storage-partitioned joins),
+    * no UI, the graft planner extensions, and WARN logging. */
+  def localSession(defaultCpus: Int): SparkSession = {
+    val n = cpus(defaultCpus)
+    val spark = SparkSession.builder()
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions()(_))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.queries("q9_region_rollup")(spark, "/root/testdata/sf0.001")

@@ -176,13 +176,6 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
   private def rowsJson(schema: StructType, rows: Seq[Row]): String =
     RowJson.render(session.catalog.spark, schema, rows)
 
-  /** One JSON string literal, fully escaped (quotes, backslashes, control
-    * chars) — for splicing user-supplied text (constraint SQL) into
-    * hand-built response documents. */
-  private def jsonStr(s: String): String =
-    org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(org.json4s.JString(s)))
-
   private def respond(ex: HttpExchange, code: Int, json: String): Unit = {
     val bytes = json.getBytes(StandardCharsets.UTF_8)
     // Default to JSON; an HTML-negotiated handler sets its own type as its
@@ -254,9 +247,7 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
        |</style></head><body><h1>${escHtml(title)}</h1>$banner$table</body></html>""".stripMargin
 
   private def jsonErr(msg: String): String =
-    """{"error":"""" + Option(msg).getOrElse("internal error")
-      .replace("\\", "\\\\").replace("\"", "\\\"")
-      .flatMap(c => if (c < ' ') "" else c.toString) + "\"}"
+    """{"error":""" + RowJson.quote(Option(msg).getOrElse("internal error")) + "}"
 
   /** Thrown by a handler to answer 303 See Other instead of a 200 body —
     * the browser-form flow (`RedirectResponse(url=f"/view/{t}", 303)`,
@@ -808,7 +799,7 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
     val table = session.catalog.table(t)
     if (ex.getRequestMethod == "GET")
       table.checkConstraint
-        .map(c => s"""{"check":${jsonStr(c)}}""").getOrElse("""{"check":null}""")
+        .map(c => s"""{"check":${RowJson.quote(c)}}""").getOrElse("""{"check":null}""")
     else {
       val c = qs(ex).getOrElse("check",
         throw new IllegalArgumentException("missing check (SQL condition)"))
@@ -817,7 +808,7 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
       try table.setCheckConstraint(c)
       catch { case e: org.apache.spark.sql.AnalysisException =>
         throw new IllegalArgumentException(e.getMessage, e) }
-      s"""{"status":"ok","check":${jsonStr(c)}}"""
+      s"""{"status":"ok","check":${RowJson.quote(c)}}"""
     }
   }
 
@@ -1060,10 +1051,6 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
   private val streams = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.streaming.StreamingQuery]()
 
-  private def jstr(s: String): String =
-    "\"" + Option(s).getOrElse("").replace("\\", "\\\\").replace("\"", "\\\"")
-      .flatMap(c => if (c < ' ') "" else c.toString) + "\""
-
   handle("/cdc") { ex =>
     val (t, action) = tableAndId(ex, "/cdc")
     action match {
@@ -1102,17 +1089,17 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
             decodeParallelism = spark.sparkContext.defaultParallelism,
             deltaPartitions = deltaParts)
         })
-        s"""{"status":"ok","table":${jstr(t)},"query_id":"${q.id}","mode":"${if (mor) "mor" else "cow"}","key":${jstr(key)}}"""
+        s"""{"status":"ok","table":${RowJson.quote(t)},"query_id":"${q.id}","mode":"${if (mor) "mor" else "cow"}","key":${RowJson.quote(key)}}"""
 
       case "status" =>
         Option(streams.get(t)) match {
-          case None => s"""{"table":${jstr(t)},"active":false}"""
+          case None => s"""{"table":${RowJson.quote(t)},"active":false}"""
           case Some(q) =>
             val lp = Option(q.lastProgress)
             val err = q.exception
-              .map(e => s""","error":${jstr(Option(e.cause).getOrElse(e).toString)}""")
+              .map(e => s""","error":${RowJson.quote(Option(e.cause).getOrElse(e).toString)}""")
               .getOrElse("")
-            s"""{"table":${jstr(t)},"active":${q.isActive},"query_id":"${q.id}","last_batch_id":${lp.map(_.batchId).getOrElse(-1L)},"last_batch_rows":${lp.map(_.numInputRows).getOrElse(0L)}$err}"""
+            s"""{"table":${RowJson.quote(t)},"active":${q.isActive},"query_id":"${q.id}","last_batch_id":${lp.map(_.batchId).getOrElse(-1L)},"last_batch_rows":${lp.map(_.numInputRows).getOrElse(0L)}$err}"""
         }
 
       case "drain" =>
@@ -1120,7 +1107,7 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
         val q = Option(streams.get(t)).filter(_.isActive).getOrElse(
           throw new NoSuchElementException(s"no active CDC stream for $t"))
         q.processAllAvailable()
-        s"""{"status":"ok","table":${jstr(t)},"drained":true}"""
+        s"""{"status":"ok","table":${RowJson.quote(t)},"drained":true}"""
 
       case "stop" =>
         require(ex.getRequestMethod == "POST", "POST required")
@@ -1131,7 +1118,7 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
         // against the same checkpoint stays blocked).
         q.stop()
         streams.remove(t, q)
-        s"""{"status":"ok","table":${jstr(t)},"stopped":true}"""
+        s"""{"status":"ok","table":${RowJson.quote(t)},"stopped":true}"""
 
       case other =>
         throw new NoSuchElementException(s"no such cdc action: $other")
@@ -1236,6 +1223,6 @@ final class GraftHttpServer(session: GraftSession, port: Int = 0,
         decodeParallelism = spark.sparkContext.defaultParallelism)
     })
     session.registerView(t)
-    s"""{"status":"ok","table":${jstr(t)},"staged_files":${parts.size},"query_id":"${q.id}","key":${jstr(key)},"mode":"cdc"}"""
+    s"""{"status":"ok","table":${RowJson.quote(t)},"staged_files":${parts.size},"query_id":"${q.id}","key":${RowJson.quote(key)},"mode":"cdc"}"""
   }
 }

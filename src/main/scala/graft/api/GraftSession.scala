@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.GraftCatalog
 
@@ -683,5 +683,23 @@ final class GraftSession(val catalog: GraftCatalog) {
       case None => base
     }
     searched.orderBy(desc(idCol)).limit(pageSize)
+  }
+}
+
+object GraftSession {
+
+  /** The session over one warehouse that `Serve` and `Shell` run. The
+    * warehouse doubles as a native Spark catalog: any `spark.sql` can
+    * address `lake.<table>` (v2 scans with storage-partitioned joins,
+    * VERSION/TIMESTAMP AS OF, INSERT INTO, metadata-aggregate pushdown)
+    * alongside the classic views, which are registered here. */
+  def open(spark: SparkSession, warehouse: String): GraftSession = {
+    val dir = java.nio.file.Paths.get(warehouse)
+    spark.conf.set("spark.sql.catalog.lake",
+      classOf[graft.connector.GraftSparkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.lake.warehouse", dir.toAbsolutePath.toString)
+    val session = new GraftSession(new GraftCatalog(spark, dir))
+    session.refreshViews()
+    session
   }
 }

@@ -1,9 +1,5 @@
 package graft.api
 
-import org.apache.spark.sql.SparkSession
-
-import graft.catalog.GraftCatalog
-
 /**
  * Standalone portal process — the runnable counterpart of the reference's
  * `uvicorn api_poc:app` entry point: one warehouse, one Spark session, the
@@ -18,27 +14,7 @@ object Serve {
       .orElse(sys.env.get("GRAFT_WAREHOUSE")).getOrElse("warehouse")
     val port = args.lift(1).map(_.toInt)
       .orElse(sys.env.get("GRAFT_PORT").map(_.toInt)).getOrElse(8000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The process's ONE warehouse doubles as a native Spark catalog: the
-    // sql verb (and any spark.sql) can address `lake.<table>` — v2 scans
-    // with storage-partitioned joins, VERSION/TIMESTAMP AS OF, INSERT
-    // INTO, and metadata-aggregate pushdown, alongside the classic views.
-    spark.conf.set("spark.sql.catalog.lake",
-      classOf[graft.connector.GraftSparkCatalog].getName)
-    spark.conf.set("spark.sql.catalog.lake.warehouse",
-      java.nio.file.Paths.get(warehouse).toAbsolutePath.toString)
-    val session = new GraftSession(
-      new GraftCatalog(spark, java.nio.file.Paths.get(warehouse)))
-    session.refreshViews()
+    val session = GraftSession.open(graft.SparkEntry.localSession(4), warehouse)
     val srv = new GraftHttpServer(session, port).start()
     println(s"graft portal listening on http://127.0.0.1:${srv.boundPort} " +
       s"(warehouse: $warehouse)")

@@ -324,8 +324,9 @@ object GraftSparkTable {
     * chain is bounded by compaction cadence, not table size — same
     * argument as the serving path's cap.
     *
-    * The amplification is PRICED, not assumed (ScaleProbe `v2_mor_chain`,
-    * SCALE_r14: buckets {16,64} × chain {1,4,8} commits): measured task
+    * The amplification is PRICED, not assumed (`SCALE_r14.json`
+    * `mor_chain_amplification`, from the scale probe removed after
+    * `b5d25fe`: buckets {16,64} × chain {1,4,8} commits): measured task
     * input bytes track `base + buckets × chainColumnBytes` linearly —
     * 64 buckets re-reading a 0.4 MB chain added ~1.1 MB of input per scan
     * (the reader requests only key/__op/projected columns off the chain,

@@ -935,8 +935,9 @@ object Dedup {
    *
    * Scale shape: the documents themselves never shuffle, and with no
    * per-hash sort anywhere a boilerplate n-gram present in every document
-   * cannot pin one task (see [[flagWindows]]; `d_span_hot` in ScaleProbe
-   * measures it). The document-frequency aggregation shuffles distinct
+   * cannot pin one task (see [[flagWindows]]; `d_span_hot` in
+   * `SCALE_r16.json` and `docs/scale_r18_local.json` measures it, from the
+   * scale probe removed after `b5d25fe`). The document-frequency aggregation shuffles distinct
    * (hash, id) pairs — 16 bytes per window after map-side combining;
    * while the duplicated-hash stats broadcast, the full-width window rows
    * never enter an exchange at all. The span merge shuffles only the

@@ -1745,13 +1745,6 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
           case Some(p) => Merge.dedupLatest(updatesP, keyP, p)
           case None => updatesP.dropDuplicates(Seq(keyP))
         }
-      // Opt-in diagnosis split (-Dgraft.mor.diag=true): an extra count()
-      // action separates "materialize + dedup" from "align + write" in the
-      // phase trace. Off by default — the count is a full extra pass.
-      val diag = sys.props.get("graft.mor.diag").contains("true")
-      val t0 = System.nanoTime()
-      val dedupSec = if (diag) { deduped.count(); (System.nanoTime() - t0) / 1e9 }
-        else 0.0
       val dataCols = deduped.drop(opCol.toSeq: _*)
       val evolved = Merge.unionSchema(headSchema, dataCols.schema)
       val tW = System.nanoTime()
@@ -1787,10 +1780,9 @@ final class GraftTable(val spark: SparkSession, val root: Path, val name: String
             "pending_deltas" -> (head.deltaDirs.size + 1).toString),
           batchKey, head.dirRecords, head.deltaDirs :+ dir, head.dirStats,
           Some(graft.log.DirDelta(Seq.empty)))
-        GraftTable.lastMergePhases = Some(
-          (if (diag) Seq("dedup" -> dedupSec) else Nil) ++ Seq(
-            "write" -> (tC - tW) / 1e9,
-            "commit" -> (System.nanoTime() - tC) / 1e9))
+        GraftTable.lastMergePhases = Some(Seq(
+          "write" -> (tC - tW) / 1e9,
+          "commit" -> (System.nanoTime() - tC) / 1e9))
         prewarmServing(Seq(dir)) // serving sees warm footers for the delta
         return snap
       } catch {

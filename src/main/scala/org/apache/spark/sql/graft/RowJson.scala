@@ -2,6 +2,8 @@ package org.apache.spark.sql.graft
 
 import java.io.CharArrayWriter
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
@@ -42,11 +44,15 @@ object RowJson {
     }
   }
 
+  /** One JSON string literal, fully escaped: quotes, backslashes and every
+    * control character, so a multi-line message keeps its line breaks. */
+  def quote(s: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance().quoteAsString(s)) + "\""
+
   /** `{"columns":[...],"rows":[...]}` around already-encoded rows — the
     * JSON face of a cursor description plus fetchall. */
   def document(columns: Seq[String], rows: Seq[String]): String = {
-    val cols = columns.map(c => "\"" + c.replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
+    val cols = columns.map(quote).mkString("[", ",", "]")
     s"""{"columns":$cols,"rows":${rows.mkString("[", ",", "]")}}"""
   }
 

@@ -459,6 +459,13 @@ class ApiHttpSpec extends AnyFunSuite {
     val q = java.net.URLEncoder.encode("SELECT bogus FROM orders_t", "UTF-8")
     val (c2, _) = get(s"/query?query=$q")
     assert(c2 == 500)
+    // A multi-line Spark message (a syntax error's `== SQL ==` block)
+    // reaches the client with its line breaks, not run together.
+    val bad = java.net.URLEncoder.encode("SELEC o_orderkey FROM orders_t", "UTF-8")
+    val (c7, b7) = get(s"/query?query=$bad")
+    assert(c7 == 500, s"$c7 $b7")
+    val org.json4s.JString(msg) = org.json4s.jackson.JsonMethods.parse(b7) \ "error"
+    assert(msg.contains("\n== SQL ==\n"), msg)
     val (c3, _) = get("/query")
     assert(c3 == 400)
     // missing id segment is a 400 with a usable message, not a MatchError 500
